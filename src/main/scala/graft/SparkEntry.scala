@@ -272,31 +272,18 @@ object SparkEntry {
     * parallel), CAPPED at the session's configured
     * spark.sql.shuffle.partitions — the cluster-tuned value — so a
     * corpus-sized replay keeps full parallelism and only provably tiny
-    * inputs shed the commit overhead. `SPARK_GRAFT_STREAM_SHUFFLE`
-    * overrides the derivation outright. */
+    * inputs shed the commit overhead. */
   private def streamShufflePartitions(s: SparkSession, inputPath: String,
-      perPartBytes: Long = 4L << 20): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map { v =>
-      // validated here (round 13): a bare toInt threw an opaque
-      // NumberFormatException, and 0/negative would fail query start
-      // far downstream with no mention of the env var
-      val n = try v.toInt catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive int, got '$v'")
-      }
-      require(n > 0,
-        s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive int, got '$v'")
-      n
-    }.getOrElse {
-      val p = new org.apache.hadoop.fs.Path(inputPath)
-      val bytes =
-        try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(p).getLength
-        catch { case _: Exception => Long.MaxValue } // unknown => keep session value
-      val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-      math.min(sessionParts,
-        math.max(4L, (bytes + perPartBytes - 1) / perPartBytes)).toInt
-    }
+      perPartBytes: Long = 4L << 20): Int = {
+    val p = new org.apache.hadoop.fs.Path(inputPath)
+    val bytes =
+      try p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
+      catch { case _: Exception => Long.MaxValue } // unknown => keep session value
+    val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
+    math.min(sessionParts,
+      math.max(4L, (bytes + perPartBytes - 1) / perPartBytes)).toInt
+  }
 
   /** Runs `body` with spark.sql.shuffle.partitions scoped to `n` (the
     * stateful-stream sizing above) and restores the session value after —
@@ -311,6 +298,20 @@ object SparkEntry {
     val prev = s.conf.get(key)
     s.conf.set(key, n.toString)
     try body finally s.conf.set(key, prev)
+  }
+
+  /** Entries of `dir` that pass `keep`, sorted by name, listed through
+    * the path's Hadoop FileSystem (any scheme); fails naming `what` and
+    * `dir` when `dir` is missing or holds no such entry. */
+  private def listEntries(s: SparkSession, dir: String, what: String)(
+      keep: org.apache.hadoop.fs.FileStatus => Boolean): Seq[org.apache.hadoop.fs.Path] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val found =
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq.filter(keep).map(_.getPath).sortBy(_.getName)
+    require(found.nonEmpty, s"no $what in $dir")
+    found
   }
 
   private def runDocStreamComplete(s: SparkSession, dir: String, name: String)(
@@ -399,27 +400,7 @@ object SparkEntry {
     val changelogKey =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     val prevChangelog = s.conf.getOption(changelogKey)
-    s.conf.set(changelogKey, sys.env.getOrElse("SPARK_GRAFT_CHANGELOG", "true"))
-    // peak state is tracked by a LISTENER over every progress event, not by
-    // maxing query.recentProgress afterwards: recentProgress retains only
-    // spark.sql.streaming.numRecentProgressUpdates (default 100) entries, so
-    // a drain with >100 microbatches would silently understate the peak the
-    // 1000x stress evidence in SCALE.md relies on
-    val peaks = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, java.lang.Long]()
-    val peakListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.stateOperators.nonEmpty) {
-          val rows = e.progress.stateOperators.map(_.numRowsTotal).sum
-          peaks.merge(e.progress.runId, rows,
-            (a, b) => if (a >= b) a else b)
-        }
-      override def onQueryTerminated(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    s.streams.addListener(peakListener)
+    s.conf.set(changelogKey, "true")
     val query =
       try withShufflePartitions(s, streamShufflePartitions(s, evPath)) {
         build(union).writeStream
@@ -442,35 +423,7 @@ object SparkEntry {
       // 2100-01-01: past every real event, inside the timestamp range
       mem.addData((-1L, 4102444800000L, -1L, "sentinel", 0.0))
       query.processAllAvailable()
-    } finally {
-      query.stop()
-      s.streams.removeListener(peakListener)
-    }
-    // state-store forensics (stderr, not stdout — Bench's JSON line owns
-    // stdout): peak rows = worst microbatch's retained state over the WHOLE
-    // run, last rows = what survived the sentinel's watermark (the eviction
-    // check the 1000x stress runs record in SCALE.md). recentProgress is
-    // kept as a max-merge fallback against listener-bus delivery lag.
-    val withState = query.recentProgress.filter(_.stateOperators.nonEmpty)
-    if (withState.nonEmpty) {
-      def rows(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Long =
-        p.stateOperators.map(_.numRowsTotal).sum
-      val peak = math.max(withState.map(rows).max,
-        Option(peaks.get(query.runId)).map(_.longValue).getOrElse(0L))
-      val stateParts = withState.last.stateOperators.head.numShufflePartitions
-      // phase forensics (round 13): where a drain's wall-clock goes —
-      // durationMs summed over every microbatch (addBatch = the batch's
-      // jobs, stateCommit etc. inside triggerExecution)
-      import scala.jdk.CollectionConverters._
-      val phases = query.recentProgress.flatMap(_.durationMs.asScala)
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2.longValue).sum }
-        .toSeq.sortBy(-_._2)
-        .map { case (k, v) => s"$k=${v}ms" }.mkString(" ")
-      System.err.println(s"[stream] $name: peakStateRows=$peak" +
-        s" lastStateRows=${rows(withState.last)}" +
-        s" stateShufflePartitions=$stateParts" +
-        s" batches=${query.recentProgress.length} $phases")
-    }
+    } finally query.stop()
     s.read.parquet(s"$out/data")
   }
 
@@ -2326,12 +2279,13 @@ object SparkEntry {
         .repartition(col("__part"))
         .write.partitionBy("__part").mode("overwrite").parquet(tmp)
       (0 until 3).foreach { b =>
-        val part = new java.io.File(s"$tmp/__part=$b").listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dest = inDir.resolve(s"b$b.parquet").toFile
-        require(part.renameTo(dest), s"stage move failed: $dest")
+        val part = listEntries(s, s"$tmp/__part=$b", "staged parquet file")(
+          st => st.isFile && st.getPath.getName.endsWith(".parquet")).head
+        val fs = part.getFileSystem(s.sparkContext.hadoopConfiguration)
+        val dest = new org.apache.hadoop.fs.Path(inDir.resolve(s"b$b.parquet").toString)
+        require(fs.rename(part, dest), s"stage move failed: $dest")
         // deterministic arrival order for the file source's mtime sort
-        require(dest.setLastModified(1700000000000L + b * 60000L))
+        fs.setTimes(dest, 1700000000000L + b * 60000L, -1L)
       }
       val idx = base.resolve("index").toString
       val surv = base.resolve("surv").toString
@@ -2356,10 +2310,9 @@ object SparkEntry {
       // sink-detection probe logs a scary FileNotFoundException stack
       // (benign, but it was the first thing in every round's
       // entry_tail); multiple resolved paths skip the probe entirely.
-      val batchDirs = new java.io.File(surv).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch-"))
-        .map(_.toString).sorted
-      s.read.parquet(batchDirs.toIndexedSeq: _*)
+      val batchDirs = listEntries(s, surv, "batch-* survivor dir")(
+        st => st.isDirectory && st.getPath.getName.startsWith("batch-"))
+      s.read.parquet(batchDirs.map(_.toString): _*)
         .select(col("doc_id"), col("batch"))
     }),
 

@@ -134,7 +134,8 @@ final class AhoCorasick(val patterns: Array[String]) {
     * states×128 DFA table (fail links resolved at build) was measured
     * SLOWER at 4k patterns (15.7s vs 8.2s over 500k docs) — the ~20 MB
     * table thrashes cache, while the sparse walk's hot shallow states
-    * stay resident. See the Probe notes on when this tier wins at all. */
+    * stay resident. When this tier wins at all: the class doc above and
+    * SCALE.md "Round-9 continuation" (blocklist tiers). */
   private def step(state: Int, c: Char): Int = {
     var s = state
     while (true) {

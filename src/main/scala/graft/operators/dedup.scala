@@ -133,6 +133,15 @@ object Dedup {
     * Pattern is immutable/thread-safe. */
   private[graft] val wsPattern = java.util.regex.Pattern.compile("\\s+")
 
+  /** Spark's `lower()` on the JVM: ASCII text folds A-Z only, whatever
+    * the JVM locale (a Turkish default would turn `I` into a dotless
+    * `ı` under `String.toLowerCase`); non-ASCII text takes the
+    * `String.toLowerCase` slow path, as `UTF8String.toLowerCase` does. */
+  private[graft] def sparkLower(s: String): String =
+    if (s.exists(_ >= 0x80)) s.toLowerCase
+    else if (!s.exists(c => c >= 'A' && c <= 'Z')) s
+    else s.map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
+
   /** md5Long as plain Scala — bit-identical to the Column form (first 15
     * hex digits of md5 = first 7 bytes + the high nibble of the 8th). */
   def md5LongJvm(s: String): Long = {
@@ -225,33 +234,10 @@ object Dedup {
       .distinct()
   }
 
-  /**
-   * Fused LSH candidates + exact Jaccard verify: one shuffle of
-   * (band-bucket, id, shingle-hash set), then bucket-local pairwise
-   * verification over sorted primitive arrays — unverified candidate
-   * pairs are never materialized and the corpus is never re-joined to
-   * fetch texts (the join-back version shuffles the full text column
-   * twice). Jaccard is over the same hashed shingle sets the signature
-   * minima come from; survivors are deduped across bands. This is the
-   * scale path behind q_dedup_minhash; `minhashCandidatePairs` +
-   * `ngramJaccard` remain the oracle-checked reference form.
-   */
   /** (bucket, id, sorted shingle hashes) rows — one per (doc, band): the
     * shared candidate-generation shape behind the fused batch verify and
     * the incremental index (`incrementalNearDup`). One signature UDF call
     * per doc; the explode is bands× rows, never pairs. */
-  /** Probe/forensics entry to the banded signature rows (IndexProbe). */
-  def bandedShingleRowsPublic(df: DataFrame, textCol: String, idCol: String,
-                              numHashes: Int, bands: Int, seed: Long,
-                              shingleN: Int): DataFrame =
-    bandedShingleRows(df, textCol, idCol, numHashes, bands, seed, shingleN)
-
-  /** Probe/forensics entry to the round-13 fused verify pass (plan
-    * evidence + IndexProbe). */
-  def fusedBucketVerifyPublic(banded: DataFrame, idxRows: Option[DataFrame],
-                              threshold: Double, maxBucketSize: Int): DataFrame =
-    fusedBucketVerify(banded, idxRows, threshold, maxBucketSize)
-
   private[operators] def bandedShingleRows(df: DataFrame, textCol: String,
                                            idCol: String, numHashes: Int,
                                            bands: Int, seed: Long,
@@ -286,6 +272,17 @@ object Dedup {
       .select(col("__bucket"), col("__id"), col("__sh"))
   }
 
+  /**
+   * Fused LSH candidates + exact Jaccard verify: one shuffle of
+   * (band-bucket, id, shingle-hash set), then bucket-local pairwise
+   * verification over sorted primitive arrays — unverified candidate
+   * pairs are never materialized and the corpus is never re-joined to
+   * fetch texts (the join-back version shuffles the full text column
+   * twice). Jaccard is over the same hashed shingle sets the signature
+   * minima come from; survivors are deduped across bands. This is the
+   * scale path behind q_dedup_minhash; `minhashCandidatePairs` +
+   * `ngramJaccard` remain the oracle-checked reference form.
+   */
   def minhashNearDupPairs(df: DataFrame, textCol: String, idCol: String,
                           numHashes: Int, bands: Int, seed: Long = 42L,
                           shingleN: Int = 1, threshold: Double = 0.8,
@@ -598,6 +595,12 @@ object Dedup {
    * index SNAPSHOT resolved before the append), so the returned plan
    * never observes the batch's own docs in the index; the append job
    * itself materializes the persisted survivors for later consumers.
+   *
+   * Distributed fallback (drop set past `graft.dedup.maxDriverDrops`):
+   * the returned survivors plan references `fused` and `banded`, which
+   * are unpersisted in `finally` before the caller reads it. Survivors
+   * stay cached by the append job, but an evicted survivor partition
+   * replays the full banded signature and fused verify pass.
    */
   def incrementalNearDup(batch: DataFrame, indexDir: String,
                          textCol: String, idCol: String,
@@ -631,10 +634,8 @@ object Dedup {
           // the floor — i.e. everywhere at scale — the pruned path runs
           // unchanged.
           val idxBytes = meta.refs.map(_.bytes).sum
-          val pruneFloor = sys.env.get("SPARK_GRAFT_IDX_PRUNE_FLOOR")
-            .map(_.toLong).getOrElse(32L << 20)
           val idx =
-            if (idxBytes <= pruneFloor)
+            if (idxBytes <= (32L << 20))
               graft.sources.GraftTable.read(spark, indexDir)
             else {
               val maxPruneKeys = 1 << 20
@@ -1578,6 +1579,18 @@ object Dedup {
         col("__r._3").cast(LongType).as("n_tokens_removed"))
   }
 
+  /** The exploded (doc, shingle-hash) relation noveltyScores aggregates.
+    * Fused JVM kernel, not the Column-form hashedTokens: no lambda-CSE
+    * re-hashing (measured 46s -> 0.3s for the explode at 5k docs). Null
+    * text carries no shingles -> no row (the LM-score convention). */
+  private def docShingles(df: DataFrame, textCol: String, idCol: String,
+                          shingleN: Int = 3): DataFrame = {
+    val shUdf = udf { (text: String) => shingleHashes(text, shingleN) }
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("__doc"),
+        explode(shUdf(col(textCol))).as("__sh"))
+  }
+
   /**
    * Per-document novelty scoring: the fraction of a document's distinct
    * word-shingles that FIRST appear in that document, where "first" is
@@ -1597,19 +1610,6 @@ object Dedup {
    * a doc-keyed hash agg. No window-over-corpus, no driver state, no
    * pair materialization.
    */
-  /** The exploded (doc, shingle-hash) relation noveltyScores aggregates —
-    * exposed package-wide for scale forensics (NoveltyProbe). Fused JVM
-    * kernel, not the Column-form hashedTokens: no lambda-CSE re-hashing
-    * (measured 46s -> 0.3s for the explode at 5k docs). Null text carries
-    * no shingles -> no row (the LM-score convention). */
-  private[graft] def docShingles(df: DataFrame, textCol: String, idCol: String,
-                                 shingleN: Int = 3): DataFrame = {
-    val shUdf = udf { (text: String) => shingleHashes(text, shingleN) }
-    df.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("__doc"),
-        explode(shUdf(col(textCol))).as("__sh"))
-  }
-
   def noveltyScores(df: DataFrame, textCol: String, idCol: String,
                     shingleN: Int = 3): DataFrame = {
     val sh = docShingles(df, textCol, idCol, shingleN)

@@ -427,17 +427,10 @@ object Quantiles {
     val spark = df.sparkSession
     import spark.implicits._
 
-    def timed[A](name: String)(f: => A): A = {
-      if (!sys.env.contains("GRAFT_QUANTILE_TRACE")) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[qtrace] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-    }
     val base = df.select(col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull && !isnan(col("__v")))
-    val stats = timed("stats")(
-      base.agg(count(lit(1)), min(col("__v")), max(col("__v"))).head())
+    val stats =
+      base.agg(count(lit(1)), min(col("__v")), max(col("__v"))).head()
     val n = stats.getLong(0)
     if (n == 0L) return ps.map(p => (p, Option.empty[Double])).toDF("p", "value")
 
@@ -480,12 +473,12 @@ object Quantiles {
       }
       val tagged = cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
         case (acc, (c, v)) => acc.when(c, v) }
-      val hist = timed(s"level $level (${ranges.length} ranges)")(base
+      val hist = base
         .select(col("__v"), tagged.as("tb"))
         .filter(col("tb").isNotNull)
         .groupBy(col("tb.rid").as("rid"), col("tb.bin").as("bin"))
         .agg(count(lit(1)).as("c"), min(col("__v")).as("mn"), max(col("__v")).as("mx"))
-        .collect())
+        .collect()
         .groupBy(_.getInt(0))
       sels = sels.map { s =>
         if (s.answer.nonEmpty || s.cnt <= collectThreshold) s
@@ -509,11 +502,9 @@ object Quantiles {
       // hit the same interpreted-loop JIT pollution as the level pass).
       val tagged = array(open.map { case (s, i) =>
         when(predOf(s), lit(i)) }: _*)
-      val rows = timed(s"final collect (${open.length} targets)")(
-        base.select(col("__v"), explode(tagged).as("tid"))
-          .filter(col("tid").isNotNull)
-          .collect())
-      rows
+      base.select(col("__v"), explode(tagged).as("tid"))
+        .filter(col("tid").isNotNull)
+        .collect()
         .groupBy(_.getInt(1))
         .map { case (tid, rows) =>
           val k = sels(tid).k.toInt

@@ -493,8 +493,9 @@ object Similarity {
    * — the same exchange-carries-cells scale shape as the batch kernel,
    * now per delta. Drained grid bit-identical by construction (decimal
    * addition is exact, so any grouping/order of the same quantized
-   * multiset sums identically); CovStreamProbe re-checks grid equality
-   * against the batch path on every run.
+   * multiset sums identically); PcaSpec ("q_embed_cov_stream: drained
+   * cells equal the batch kernel bit-for-bit") pins grid equality
+   * against the batch path.
    *
    * Cells are tracked in a LongMap keyed by (i, j), so ragged vectors
    * contribute to exactly the cells their length reaches — per-cell

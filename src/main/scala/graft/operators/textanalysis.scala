@@ -1127,7 +1127,7 @@ object TextAnalysis {
           if (t != null) {
             // JVM twin of words(): split(lower(text), "\\s+") with
             // Spark's limit = -1 (leading/trailing empties kept)
-            val ws = t.toLowerCase.split("\\s+", -1)
+            val ws = Dedup.wsPattern.split(Dedup.sparkLower(t), -1)
             var i = 0
             while (i < ws.length) {
               counts.getOrElseUpdate(ws(i), new Array[Long](1))(0) += 1

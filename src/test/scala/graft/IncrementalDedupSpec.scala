@@ -190,4 +190,16 @@ class IncrementalDedupSpec extends GraftSpec {
     assert(s.select("doc_id").as[Long].collect().sorted.toSeq == Seq(100L))
     s.unpersist()
   }
+
+  test("q_index_stream over all-null text fails naming the missing staged dir") {
+    val dir = Files.createTempDirectory("idx_null_text").toString
+    Seq((1L, null.asInstanceOf[String]), (2L, null.asInstanceOf[String]))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.queries("q_index_stream")(spark, dir)
+    }
+    assert(e.getMessage.matches(
+      "requirement failed: no staged parquet file in \\S*graft_idxstream_\\S*/tmp/__part=0"),
+      e.getMessage)
+  }
 }

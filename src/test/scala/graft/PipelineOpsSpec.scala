@@ -1141,12 +1141,14 @@ class PipelineOpsSpec extends GraftSpec {
     }
   }
 
-  test("countMinCells per-task pre-agg equals the explode+agg reference form") {
+  private def countMinMatchesReference(): Unit = {
     import graft.operators.{TextAnalysis, Dedup}
-    // tricky tokenizations: case folding, leading/trailing whitespace
+    // tricky tokenizations: case folding (ASCII `I`, which a Turkish
+    // locale would fold to a dotless `ı`), leading/trailing whitespace
     // (split keeps the empty edge tokens), empty text, null text, tabs
     val docs = Seq((1L, "Spark SPARK flink"), (2L, " lead trail "),
-      (3L, ""), (4L, null.asInstanceOf[String]), (5L, "a\t b\nc a"))
+      (3L, ""), (4L, null.asInstanceOf[String]), (5L, "a\t b\nc a"),
+      (6L, "FLINK Is IT"))
       .toDF("doc_id", "text")
     def cells(d: org.apache.spark.sql.DataFrame) = d.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -1161,6 +1163,17 @@ class PipelineOpsSpec extends GraftSpec {
         bucket(col("term"), col("r")).cast("long").as("b"))
       .groupBy(col("r"), col("b")).agg(count(lit(1)).as("cc")))
     assert(got == ref, s"pre-agg grid != reference grid")
+  }
+
+  test("countMinCells per-task pre-agg equals the explode+agg reference form") {
+    countMinMatchesReference()
+  }
+
+  test("countMinCells folds case like Spark's lower() under a Turkish default locale") {
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try countMinMatchesReference()
+    finally java.util.Locale.setDefault(prev)
   }
 
   test("hllRegisters per-task pre-agg equals the Column-chain reference form") {
