@@ -222,15 +222,6 @@ object SparkEntry {
   private lazy val onlineAhpW: Array[Double] = AHP.weightVector(onlineJudgment)
   private val onlineWindowMs = 3L * 86400000L
 
-  /** Streaming-parity harness: replays the events table through a REAL
-    * file-source stream (no driver-side data beyond ONE sentinel row),
-    * runs `build` on it, and drains to a memory sink. The far-future
-    * sentinel (user_id = -1) advances the event-time watermark past every
-    * window/left so append-mode state flushes completely — end-of-stream
-    * batch parity, which is what the DuckDB oracle checks. Spark's
-    * no-data micro-batches then emit the final results before stop().
-    * At scale the same `build` pipeline runs unmodified on a live
-    * readStream; only this drain harness is test-shaped. */
   private val streamRun = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Every drain's temp dir (parquet results + checkpoint + RocksDB state)
@@ -250,55 +241,54 @@ object SparkEntry {
       }
     }))
 
-  /** Complete-mode drain for BOUNDED streaming aggregations (sketch
-    * grids, O(cells) rollups): replays the documents table as a file
-    * stream, runs `build` (which must end in a streaming agg whose group
-    * count is bounded by construction, NOT by the data), drains to a
-    * complete-mode memory sink, and returns the final table localized.
-    * No watermark/sentinel machinery — complete mode re-emits the whole
-    * bounded result each batch, so end-of-stream state IS batch parity.
-    * The memory sink holds exactly the agg's group count (4096 rows for
-    * the 4x1024 sketch) — driver-bounded by the operator's shape. */
   /** Shuffle-partition count for a streaming drain's STATEFUL exchange,
-    * derived from the replay input's size (round 12). Streaming disables
-    * AQE, so the post-shuffle coalescing that right-sizes every batch
-    * exchange never runs — a stateful query commits one state store per
-    * shuffle partition per microbatch instead, a pure fixed cost
-    * (~40–60 ms/store/batch measured for the RocksDB drains: the
-    * q_hll_window+q_sessionize_stream pair reads 9.8 s at 32 partitions,
-    * 6.3 s at 8, 6.5 s at 4 — linear in partitions past the knee).
-    * Derivation, not a local constant: one partition per `perPartBytes`
-    * of replay input, floored at 4 (keep the post-exchange compute
-    * parallel), CAPPED at the session's configured
-    * spark.sql.shuffle.partitions — the cluster-tuned value — so a
-    * corpus-sized replay keeps full parallelism and only provably tiny
-    * inputs shed the commit overhead. */
-  private def streamShufflePartitions(s: SparkSession, inputPath: String,
+    * derived from the replay input's size. Streaming disables AQE, so the
+    * post-shuffle coalescing that right-sizes every batch exchange never
+    * runs — a stateful query commits one state store per shuffle
+    * partition per microbatch instead, a pure fixed cost (~40–60 ms per
+    * store per batch for the RocksDB drains). One partition per
+    * `perPartBytes` of replay input, floored at 1, CAPPED at the
+    * session's spark.sql.shuffle.partitions — the cluster-tuned value —
+    * so a corpus-sized replay keeps full parallelism (the 100x events
+    * replay derives 50) and a test-sized one commits a single store.
+    * The old floor of 4 came from a 32-core sweep that never went below
+    * 4; on a 4-core box, dropping it (with the 2-batch drain) took the
+    * state commits of a traced q_online_ahp_stream from 1.9-2.3 s to
+    * 0.13-0.15 s per pass (SCALE.md, 2026-10-17). Unknown size (the
+    * path cannot be read) keeps the session value. */
+  private[graft] def streamShufflePartitions(s: SparkSession, inputPath: String,
       perPartBytes: Long = 4L << 20): Int = {
     val p = new org.apache.hadoop.fs.Path(inputPath)
     val bytes =
-      try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-      catch { case _: Exception => Long.MaxValue } // unknown => keep session value
+      try Some(p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength)
+      catch { case _: Exception => None }
     val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    math.min(sessionParts,
-      math.max(4L, (bytes + perPartBytes - 1) / perPartBytes)).toInt
+    bytes.fold(sessionParts)(b => math.min(sessionParts,
+      math.max(1L, (b + perPartBytes - 1) / perPartBytes)).toInt)
   }
 
-  /** Runs `body` with spark.sql.shuffle.partitions scoped to `n` (the
-    * stateful-stream sizing above) and restores the session value after —
-    * the same scoped-conf pattern as the RocksDB provider swap. The
-    * partition count is baked into the stream's state layout at START,
-    * so only query start needs the scope. NOT thread-safe: the session
-    * conf is shared, so two streams starting concurrently could capture
-    * each other's count — every caller here starts streams from the
-    * single driver thread (the Bench/Verify mains are sequential). */
-  private def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
+  /** Runs `body` with each `key -> value` set on the session conf, then
+    * restores every key to its previous value, or unsets it if it was
+    * unset. Streaming reads the shuffle-partition count and the state
+    * store confs at query START, so only the start needs the scope. NOT
+    * thread-safe: the session conf is shared, so two streams starting
+    * concurrently could capture each other's confs — every caller here
+    * starts streams from the single driver thread (the Bench/Verify
+    * mains are sequential). */
+  private[graft] def withConfs[A](s: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
+
+  /** The shuffle-partition conf for a stateful drain over `inputPath`. */
+  private def streamPartitionsConf(s: SparkSession, inputPath: String): (String, String) =
+    "spark.sql.shuffle.partitions" -> streamShufflePartitions(s, inputPath).toString
 
   /** Entries of `dir` that pass `keep`, sorted by name, listed through
     * the path's Hadoop FileSystem (any scheme); fails naming `what` and
@@ -314,12 +304,20 @@ object SparkEntry {
     found
   }
 
+  /** [[runTableStreamComplete]] over the documents table. */
   private def runDocStreamComplete(s: SparkSession, dir: String, name: String)(
       build: DataFrame => DataFrame): DataFrame =
     runTableStreamComplete(s, dir, "documents", name)(build)
 
-  /** [[runDocStreamComplete]] over any testdata table — same bounded-
-    * group contract, same complete-mode memory-sink drain. */
+  /** Complete-mode drain for BOUNDED streaming aggregations (sketch
+    * grids, O(cells) rollups): replays a testdata table as a file
+    * stream, runs `build` (which must end in a streaming agg whose group
+    * count is bounded by construction, NOT by the data), drains to a
+    * complete-mode memory sink, and returns the final table localized.
+    * No watermark/sentinel machinery — complete mode re-emits the whole
+    * bounded result each batch, so end-of-stream state IS batch parity.
+    * The memory sink holds exactly the agg's group count (4096 rows for
+    * the 4x1024 sketch) — driver-bounded by the operator's shape. */
   private def runTableStreamComplete(s: SparkSession, dir: String,
       table: String, name: String)(
       build: DataFrame => DataFrame): DataFrame = {
@@ -332,8 +330,7 @@ object SparkEntry {
         s.readStream.schema(schema)
           .option("pathGlobFilter", s"$table.parquet").parquet(dir)
     val qn = s"graft_docstream_${name}_${streamRun.incrementAndGet()}"
-    val query = withShufflePartitions(s,
-        streamShufflePartitions(s, docPath)) {
+    val query = withConfs(s, streamPartitionsConf(s, docPath)) {
       build(raw).writeStream
         .format("memory").queryName(qn)
         .outputMode("complete").start()
@@ -346,6 +343,20 @@ object SparkEntry {
     } finally query.stop()
   }
 
+  /** Streaming-parity harness: replays the events table through a REAL
+    * file-source stream (no driver-side data beyond ONE sentinel row),
+    * runs `build` on it, and drains to a parquet sink. The far-future
+    * sentinel (user_id = -1) is queued BEFORE start, so it rides
+    * microbatch 0 with the whole replay: batch 0 still runs under the
+    * initial watermark (no real row can be late), and when it ends the
+    * watermark jumps past every real window/left. Spark's automatic
+    * no-data batch 1 then fires every timer and evicts every window —
+    * end-of-stream batch parity, which is what the DuckDB oracle checks
+    * — and `processAllAvailable` waits for it. The sentinel's own window
+    * never emits (the callers also filter it out). Two microbatches per
+    * drain; queueing the sentinel after start would race batch 0's
+    * construction. At scale the same `build` pipeline runs unmodified on
+    * a live readStream; only this drain harness is test-shaped. */
   private def runEventStream(s: SparkSession, dir: String, name: String)(
       build: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -367,6 +378,8 @@ object SparkEntry {
       "event_id", "ts AS tms", "user_id", "event_type",
       "CAST(value AS DOUBLE) AS v")
     val mem = MemoryStream[(Long, Long, Long, String, Double)]
+    // 2100-01-01: past every real event, inside the timestamp range
+    mem.addData((-1L, 4102444800000L, -1L, "sentinel", 0.0))
     val union = ev.unionByName(
       mem.toDS().toDF("event_id", "tms", "user_id", "event_type", "v"))
     // drain to a FILE sink, not a memory sink: the memory sink collects
@@ -383,47 +396,24 @@ object SparkEntry {
     // session/left of the corpus in state at once — the default
     // HDFS-backed provider keeps that on the JVM heap (9.1M entries at
     // the 100x point; an OOM at 1000x), RocksDB spills it off-heap/disk.
-    // Scoped to this query and restored after: the provider is read at
-    // query START from the session conf.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // changelog checkpointing: each commit uploads the batch's DELTA
+    // Changelog checkpointing: each commit uploads the batch's DELTA
     // instead of a full RocksDB snapshot (snapshots move to the
-    // background maintenance thread). The drain runs 4 microbatches x
-    // #shuffle-partitions store commits against the virtio disk; full
-    // snapshots made every commit an fsync-bound copy, and episodic
-    // host-side disk stalls multiplied exactly that fixed cost (the
-    // q_asof_stream 6.4s<->29.8s swing in BASELINE.md — root cause
-    // written down in SCALE.md round 11)
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevChangelog = s.conf.getOption(changelogKey)
-    s.conf.set(changelogKey, "true")
-    val query =
-      try withShufflePartitions(s, streamShufflePartitions(s, evPath)) {
-        build(union).writeStream
-          .format("parquet").option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append").start()
-      }
-      finally {
-        prevProvider match {
-          case Some(v) => s.conf.set(providerKey, v)
-          case None => s.conf.unset(providerKey)
-        }
-        prevChangelog match {
-          case Some(v) => s.conf.set(changelogKey, v)
-          case None => s.conf.unset(changelogKey)
-        }
-      }
-    try {
-      query.processAllAvailable()
-      // 2100-01-01: past every real event, inside the timestamp range
-      mem.addData((-1L, 4102444800000L, -1L, "sentinel", 0.0))
-      query.processAllAvailable()
-    } finally query.stop()
+    // background maintenance thread). The drain commits 2 microbatches x
+    // #shuffle-partitions stores against the disk; full snapshots made
+    // every commit an fsync-bound copy, and episodic host-side disk
+    // stalls multiplied exactly that fixed cost (the q_asof_stream
+    // 6.4s<->29.8s swing in BASELINE.md — root cause written down in
+    // SCALE.md round 11)
+    val query = withConfs(s, streamPartitionsConf(s, evPath),
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
+      build(union).writeStream
+        .format("parquet").option("path", s"$out/data")
+        .option("checkpointLocation", s"$out/ckpt")
+        .outputMode("append").start()
+    }
+    try query.processAllAvailable() finally query.stop()
     s.read.parquet(s"$out/data")
   }
 
@@ -2296,7 +2286,7 @@ object SparkEntry {
       // stateful drains: a ~1.7k-doc microbatch over 32-partition
       // exchanges is pure task-scheduling overhead; results are
       // partitioning-independent)
-      withShufflePartitions(s, streamShufflePartitions(s, inDir.toString)) {
+      withConfs(s, streamPartitionsConf(s, inDir.toString)) {
         val q = Dedup.incrementalNearDupSink(
           s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
             .parquet(inDir.toString),

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.operators.Dedup
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -51,7 +52,7 @@ object Blocklist {
 
   /** Per-pattern counts for one document (called from generated code). */
   def hitCounts(text: UTF8String): ArrayData = {
-    val t = text.toString.toLowerCase
+    val t = Dedup.sparkLower(text.toString)
     val out = new Array[Any](patterns.length)
     var i = 0
     while (i < patterns.length) { out(i) = countNonOverlap(t, patterns(i)); i += 1 }
@@ -178,7 +179,7 @@ object AhoCorasick {
   /** Codegen entry point: [[Blocklist.hitCounts]]'s contract, one text
     * walk for the whole pattern set. */
   def hitCounts(text: UTF8String): ArrayData = {
-    val c = blocklist.counts(text.toString.toLowerCase)
+    val c = blocklist.counts(Dedup.sparkLower(text.toString))
     val out = new Array[Any](c.length)
     var i = 0
     while (i < c.length) { out(i) = c(i); i += 1 }

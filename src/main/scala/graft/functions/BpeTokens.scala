@@ -102,7 +102,7 @@ object BpeTokenizer {
 
   /** Document-level count (called from generated code). */
   def countTokens(text: UTF8String): Long = {
-    val words = Dedup.wsPattern.split(text.toString.toLowerCase)
+    val words = Dedup.wsPattern.split(Dedup.sparkLower(text.toString))
     var sum = 0L
     var i = 0
     while (i < words.length) { sum += encodeWordCount(words(i)); i += 1 }
@@ -115,7 +115,7 @@ object BpeTokenizer {
     * STRINGS are the portable ids (a fixed vocab->int mapping is a
     * broadcast dictionary lookup away and adds nothing replayable). */
   def encodeTokens(text: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val words = Dedup.wsPattern.split(text.toString.toLowerCase)
+    val words = Dedup.wsPattern.split(Dedup.sparkLower(text.toString))
     val out = new scala.collection.mutable.ArrayBuffer[UTF8String](words.length * 2)
     var i = 0
     while (i < words.length) {

@@ -57,7 +57,7 @@ object HashTfLinearMargin {
     * and static-shaped). Empty text still scores: the splitter yields
     * one empty token, so n >= 1 always — no division guard needed. */
   def score(text: UTF8String, weightsMilli: Array[Long], bias: Double): Double = {
-    val words = Dedup.wsPattern.split(text.toString.toLowerCase)
+    val words = Dedup.wsPattern.split(Dedup.sparkLower(text.toString))
     val dim = weightsMilli.length
     var sum = 0L
     var i = 0

@@ -127,92 +127,92 @@ class Apriori(override val uid: String) extends Transformer
     // scale; freed right after the frequent-itemset collect.
     val tx = df.select(col($(inputCols)(0)).cast(StringType)).as[String]
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val numTx = tx.count()
+    val frequent = try {
+      val numTx = tx.count()
 
-    // Subset counting: one flatMap + one hash-aggregated groupBy.
-    // Positional enumeration like the reference's nchoosek
-    // (Apriori.java:320-365): each subset counts once per index tuple, so
-    // repeated items within a transaction contribute one count per
-    // occurrence. Hand-rolled next-combination over a primitive index
-    // array — `Range.combinations` boxes every index and allocates an
-    // intermediate IndexedSeq per subset, which tripled this flatMap's
-    // cost at the 100x scale point.
-    val basketCap = $(maxBasketSize)
-    val truncAcc = spark.sparkContext.longAccumulator("apriori.truncatedBaskets")
-    val minSup = $(minSupport)
-    val freqCap = $(maxFrequentItemsets)
+      // Subset counting: one flatMap + one hash-aggregated groupBy.
+      // Positional enumeration like the reference's nchoosek
+      // (Apriori.java:320-365): each subset counts once per index tuple, so
+      // repeated items within a transaction contribute one count per
+      // occurrence. Hand-rolled next-combination over a primitive index
+      // array — `Range.combinations` boxes every index and allocates an
+      // intermediate IndexedSeq per subset, which tripled this flatMap's
+      // cost at the 100x scale point.
+      val basketCap = $(maxBasketSize)
+      val truncAcc = spark.sparkContext.longAccumulator("apriori.truncatedBaskets")
+      val minSup = $(minSupport)
+      val freqCap = $(maxFrequentItemsets)
 
-    // TWO-PHASE counting (round-11 100x fix; output-identical by
-    // construction). The subset lattice is data-sized — enumerating it
-    // is unavoidable under reference semantics — but shuffling it as
-    // variable-length string sequences was ~3/4 of the 100x cost
-    // (Seq hashing, per-subset allocation, fat exchange rows).
-    //
-    // PASS 1 discovers CANDIDATES on order-sensitive 64-bit rolling
-    // hashes of each subsequence: the flatMap emits one primitive long
-    // per subset (no allocation — hashes fold over a per-basket item-
-    // hash array inside the combination walk) and the count aggregates
-    // in a dense Tungsten long agg. A hash collision can only MERGE
-    // counts upward, so no truly-frequent subsequence is ever lost;
-    // false positives survive to pass 2 where exact strings kill them.
-    //
-    // PASS 2 re-enumerates, keeps only subsets whose hash hits the
-    // broadcast sorted candidate array (binary search, zero boxing),
-    // and counts THOSE by their exact item sequence — frequent-set
-    // volume, not lattice volume, on the wire. Measured at the 60M-
-    // basket 100x point, warm min-of-2: q_apriori 99.8 -> 18.2s,
-    // q_apriori_levelwise 131.2 -> 17.5s.
-    val candidates = tx.flatMap { line =>
-      val all = line.split(sep)
-      val items =
-        if (all.length <= basketCap) all
-        else { truncAcc.add(1L); all.take(basketCap) }
-      val ih = new Array[Long](items.length)
-      var i = 0
-      while (i < items.length) { ih(i) = Apriori.itemHash64(items(i)); i += 1 }
-      (1 to math.min(items.length, cap)).iterator
-        .flatMap(k => Apriori.hashSubsets(ih, k))
-    }.groupBy(col("value").as("__h")).count()
-      .filter(col("count") / lit(numTx.toDouble) >= minSup)
-      .select(col("__h"))
-      .limit(if (freqCap == Int.MaxValue) freqCap else freqCap + 1)
-      .collect()
-    if (candidates.length > freqCap)
-      throw new IllegalStateException(
-        s"Apriori found more than $freqCap frequent itemsets: minSupport=$minSup " +
-          s"is too low for this item domain (support pruning is what keeps " +
-          s"rule generation driver-sized). Raise minSupport, lower " +
-          s"maxItemsetSize, or raise maxFrequentItemsets explicitly.")
-    truncatedBaskets = truncAcc.value // materialized by the collect
-    val candArr = candidates.map(_.getLong(0)).sorted
-    val candB = spark.sparkContext.broadcast(candArr)
+      // TWO-PHASE counting (round-11 100x fix; output-identical by
+      // construction). The subset lattice is data-sized — enumerating it
+      // is unavoidable under reference semantics — but shuffling it as
+      // variable-length string sequences was ~3/4 of the 100x cost
+      // (Seq hashing, per-subset allocation, fat exchange rows).
+      //
+      // PASS 1 discovers CANDIDATES on order-sensitive 64-bit rolling
+      // hashes of each subsequence: the flatMap emits one primitive long
+      // per subset (no allocation — hashes fold over a per-basket item-
+      // hash array inside the combination walk) and the count aggregates
+      // in a dense Tungsten long agg. A hash collision can only MERGE
+      // counts upward, so no truly-frequent subsequence is ever lost;
+      // false positives survive to pass 2 where exact strings kill them.
+      //
+      // PASS 2 re-enumerates, keeps only subsets whose hash hits the
+      // broadcast sorted candidate array (binary search, zero boxing),
+      // and counts THOSE by their exact item sequence — frequent-set
+      // volume, not lattice volume, on the wire. Measured at the 60M-
+      // basket 100x point, warm min-of-2: q_apriori 99.8 -> 18.2s,
+      // q_apriori_levelwise 131.2 -> 17.5s.
+      val candidates = tx.flatMap { line =>
+        val all = line.split(sep)
+        val items =
+          if (all.length <= basketCap) all
+          else { truncAcc.add(1L); all.take(basketCap) }
+        val ih = new Array[Long](items.length)
+        var i = 0
+        while (i < items.length) { ih(i) = Apriori.itemHash64(items(i)); i += 1 }
+        (1 to math.min(items.length, cap)).iterator
+          .flatMap(k => Apriori.hashSubsets(ih, k))
+      }.groupBy(col("value").as("__h")).count()
+        .filter(col("count") / lit(numTx.toDouble) >= minSup)
+        .select(col("__h"))
+        .limit(if (freqCap == Int.MaxValue) freqCap else freqCap + 1)
+        .collect()
+      if (candidates.length > freqCap)
+        throw new IllegalStateException(
+          s"Apriori found more than $freqCap frequent itemsets: minSupport=$minSup " +
+            s"is too low for this item domain (support pruning is what keeps " +
+            s"rule generation driver-sized). Raise minSupport, lower " +
+            s"maxItemsetSize, or raise maxFrequentItemsets explicitly.")
+      truncatedBaskets = truncAcc.value // materialized by the collect
+      val candArr = candidates.map(_.getLong(0)).sorted
+      val candB = spark.sparkContext.broadcast(candArr)
 
-    val counts = tx.flatMap { line =>
-      val all = line.split(sep)
-      val items = if (all.length <= basketCap) all else all.take(basketCap)
-      val ih = new Array[Long](items.length)
-      var i = 0
-      while (i < items.length) { ih(i) = Apriori.itemHash64(items(i)); i += 1 }
-      (1 to math.min(items.length, cap)).iterator
-        .flatMap(k => Apriori.candidateSubsets(items, ih, k, candB.value))
-    }.groupBy(col("value").as("itemSet")).count()
+      try {
+        val counts = tx.flatMap { line =>
+          val all = line.split(sep)
+          val items = if (all.length <= basketCap) all else all.take(basketCap)
+          val ih = new Array[Long](items.length)
+          var i = 0
+          while (i < items.length) { ih(i) = Apriori.itemHash64(items(i)); i += 1 }
+          (1 to math.min(items.length, cap)).iterator
+            .flatMap(k => Apriori.candidateSubsets(items, ih, k, candB.value))
+        }.groupBy(col("value").as("itemSet")).count()
 
-    // exact support filter on the string-keyed counts: pass-1 hash
-    // collisions (merged counts) die here, so the frequent set is
-    // IDENTICAL to the single-phase enumeration's
-    val collected = counts
-      .withColumn("support", col("count") / lit(numTx.toDouble))
-      .filter(col("support") >= minSup)
-      .limit(if (freqCap == Int.MaxValue) freqCap else freqCap + 1)
-      .collect()
-    val frequent = collected
-      .map { r =>
-        (r.getAs[scala.collection.Seq[String]]("itemSet").toList,
-          r.getAs[Long]("count").toInt, r.getAs[Double]("support"))
-      }
-
-    tx.unpersist(blocking = false)
-    candB.destroy()
+        // exact support filter on the string-keyed counts: pass-1 hash
+        // collisions (merged counts) die here, so the frequent set is
+        // IDENTICAL to the single-phase enumeration's
+        counts
+          .withColumn("support", col("count") / lit(numTx.toDouble))
+          .filter(col("support") >= minSup)
+          .limit(if (freqCap == Int.MaxValue) freqCap else freqCap + 1)
+          .collect()
+          .map { r =>
+            (r.getAs[scala.collection.Seq[String]]("itemSet").toList,
+              r.getAs[Long]("count").toInt, r.getAs[Double]("support"))
+          }
+      } finally candB.destroy()
+    } finally tx.unpersist(blocking = false)
 
     val rules = Apriori.generateRules(frequent, $(maxIter))
       .filter(r => r.confidence >= $(minConfidence) && r.lift >= $(lift))

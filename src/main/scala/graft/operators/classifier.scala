@@ -86,7 +86,7 @@ object QualityClassifier {
                        dim: Int, alpha: Double = 1.0): (Array[Long], (Long, Long)) = {
     require(dim > 0 && dim <= (1 << 20), s"dim must be in [1, 2^20] (got $dim)")
     val bucketUdf = udf { (text: String) =>
-      Dedup.wsPattern.split(text.toLowerCase)
+      Dedup.wsPattern.split(Dedup.sparkLower(text))
         .map(w => (Dedup.md5LongJvm(w) % dim).toInt)
     }
     // null text contributes no tokens to either distribution (scoring
@@ -189,7 +189,7 @@ object QualityClassifier {
     require(iters >= 0 && iters <= 64, s"iters must be in [0, 64] (got $iters)")
     val spark = df.sparkSession
     val bucketUdf = udf { (text: String) =>
-      Dedup.wsPattern.split(text.toLowerCase)
+      Dedup.wsPattern.split(Dedup.sparkLower(text))
         .map(w => (Dedup.md5LongJvm(w) % dim).toInt)
     }
     val base = df.filter(col(textCol).isNotNull)

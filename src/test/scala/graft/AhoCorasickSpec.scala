@@ -73,4 +73,14 @@ class AhoCorasickSpec extends GraftSpec {
     got.foreach { case (a, b) => assert(a == b) }
     assert(got.map(_._1.sum).toSeq == Seq(3L, 2L, 2L))
   }
+
+  test("both blocklist kernels fold case like Spark's lower() under a Turkish default locale") {
+    withTurkishLocale {
+      val got = Seq("HASH JOIN over BIG DATA, Hash Join again").toDF("text")
+        .select(BlocklistHits(col("text")).as("a"), BlocklistHitsAC(col("text")).as("b"))
+        .as[(Seq[Long], Seq[Long])].head()
+      // patterns: hash join, table scan, sort merge, slow query, big data
+      assert(got == ((Seq(2L, 0L, 0L, 0L, 1L), Seq(2L, 0L, 0L, 0L, 1L))), s"$got")
+    }
+  }
 }

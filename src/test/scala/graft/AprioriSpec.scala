@@ -108,6 +108,25 @@ class AprioriSpec extends GraftSpec {
     assert(e.getMessage.contains("minSupport"), e.getMessage)
   }
 
+  test("a capped fit releases its persisted transactions") {
+    // q_apriori's baskets at sf0.001 hold far more than one frequent
+    // itemset, so a cap of 1 throws after the transactions are persisted
+    import org.apache.spark.sql.functions._
+    val tx = spark.read.parquet(sf() + "/lineitem.parquet")
+      .select(col("l_orderkey"),
+        concat(lit("i"), pmod(col("l_partkey"), lit(12))).as("item"))
+      .groupBy("l_orderkey")
+      .agg(concat_ws("/", sort_array(collect_set(col("item")))).as("items"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalStateException] {
+      new Apriori().setMinSupport(0.05).setMinConfidence(0.1).setLift(1.0)
+        .setItemSeparator("/").setInputCols("items").setMaxItemsetSize(2)
+        .setMaxFrequentItemsets(1)
+        .transform(tx)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("two-phase enumerators agree with the reference index walk") {
     // indexSubsets is the reference enumeration (Apriori.java:320-365
     // order); hashSubsets and candidateSubsets must walk the SAME

@@ -119,4 +119,17 @@ class BpeSpec extends GraftSpec {
       symbols += a + b
     }
   }
+
+  test("count and encode fold case like Spark's lower() under a Turkish default locale") {
+    withTurkishLocale {
+      def utf(t: String) = org.apache.spark.unsafe.types.UTF8String.fromString(t)
+      def enc(t: String) = {
+        val a = BpeTokenizer.encodeTokens(utf(t))
+        (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
+      }
+      val (upper, lower) = ("THINKING IN TIME", "thinking in time")
+      assert(enc(upper) == enc(lower), s"${enc(upper)}")
+      assert(BpeTokenizer.countTokens(utf(upper)) == BpeTokenizer.countTokens(utf(lower)))
+    }
+  }
 }

@@ -192,4 +192,40 @@ class ClassifierSpec extends GraftSpec {
       wts, bias / 1000.0).orderBy("doc_id").collect().map(_.getDouble(1))
     assert(viaDf.sameElements(direct))
   }
+
+  // ------------------------- case folding under a Turkish default locale
+
+  // the same words upper- and pre-lowercased: each kernel must fold `I`
+  // to ASCII `i` as Spark's lower() does, whatever the JVM locale
+  private val upper = "FLINK Is IT IN Index TIME"
+  private val lower = "flink is it in index time"
+
+  test("margin folds case like Spark's lower() under a Turkish default locale") {
+    withTurkishLocale {
+      val m = Seq(upper, lower).toDF("text")
+        .select(HashTfLinearMargin($"text", w, 0.1)).as[Double].collect()
+      assert(m(0) == m(1), s"margins ${m.toSeq}")
+    }
+  }
+
+  test("DSIR weights fold case like Spark's lower() under a Turkish default locale") {
+    withTurkishLocale {
+      def weights(t: String) = QualityClassifier.dsirWeightsMilli(
+        Seq((t, true), ("spam buy now", false)).toDF("text", "tgt"),
+        "text", col("tgt"), dim = dim)._1.toSeq
+      assert(weights(upper) == weights(lower))
+    }
+  }
+
+  test("trainer folds case like Spark's lower() under a Turkish default locale") {
+    withTurkishLocale {
+      def model(t: String) = {
+        val (wts, bias) = QualityClassifier.trainLogisticMilli(
+          Seq((t, true), ("spam buy now", false)).toDF("text", "y"),
+          "text", col("y"), dim = dim, iters = 3, lr = 32.0, lrBias = 0.25)
+        (wts.toSeq, bias)
+      }
+      assert(model(upper) == model(lower))
+    }
+  }
 }

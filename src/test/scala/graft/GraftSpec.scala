@@ -26,16 +26,16 @@ abstract class GraftSpec extends AnyFunSuite {
   /** Scope the RocksDB state store provider over `body` (the provider is
     * read at streaming-query START) — required by transformWithState
     * (column families), matching SparkEntry's production drain config. */
-  def withRocksDB[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+  def withRocksDB[T](body: => T): T =
+    SparkEntry.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
+  /** Runs `body` under a Turkish default locale, where `String.toLowerCase`
+    * folds ASCII `I` to a dotless `ı`; restores the previous locale after. */
+  def withTurkishLocale[T](body: => T): T = {
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try body finally java.util.Locale.setDefault(prev)
   }
 
   def assertApprox(got: Seq[Double], want: Seq[Double], tol: Double): Unit = {

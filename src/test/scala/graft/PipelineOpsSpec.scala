@@ -1170,10 +1170,7 @@ class PipelineOpsSpec extends GraftSpec {
   }
 
   test("countMinCells folds case like Spark's lower() under a Turkish default locale") {
-    val prev = java.util.Locale.getDefault
-    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
-    try countMinMatchesReference()
-    finally java.util.Locale.setDefault(prev)
+    withTurkishLocale(countMinMatchesReference())
   }
 
   test("hllRegisters per-task pre-agg equals the Column-chain reference form") {
