@@ -20,8 +20,38 @@ object SparkEntry {
     * spark.sql.session.timeZone=UTC, so the NTZ read hashes identically
     * to the DuckDB oracle's epoch_ms(ts). */
   private[graft] def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = s.read.schema(parquetSchema(s, path)).parquet(path)
     if (name == "events") df.withColumn("ts", epochMillis(df, "ts")) else df
+  }
+
+  /** path -> (fingerprint, schema) of the last inference at that path. */
+  private val parquetSchemas = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[Any], org.apache.spark.sql.types.StructType)]()
+
+  /** The schema Spark infers for the parquet at `path`, cached. Inference
+    * is a one-task job per read (a footer scan), about 50-70 ms of
+    * scheduling on a 4-core box; the cached schema goes to `.schema(...)`
+    * so a repeated read runs no job. The fingerprint is every leaf
+    * file's name, length and mtime, plus the session's
+    * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` values
+    * (`nanosAsLong`, `binaryAsString` and friends change the inferred
+    * types): a rewrite or a flipped conf infers again. */
+  private[graft] def parquetSchema(s: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // getFileStatus/listStatus, not listFiles: a located status reads the
+    // permissions, which the local FS forks `ls` for
+    def leaves(st: org.apache.hadoop.fs.FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.getName).flatMap(leaves)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    val confs = s.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    val fingerprint: Seq[Any] = Seq(leaves(fs.getFileStatus(p)), confs)
+    parquetSchemas.compute(path, (_, cached) =>
+      if (cached != null && cached._1 == fingerprint) cached
+      else (fingerprint, s.read.parquet(path).schema))._2
   }
 
   /** Column `c` as epoch-millis LONG whatever its physical carrier. */
@@ -270,12 +300,14 @@ object SparkEntry {
 
   /** Runs `body` with each `key -> value` set on the session conf, then
     * restores every key to its previous value, or unsets it if it was
-    * unset. Streaming reads the shuffle-partition count and the state
-    * store confs at query START, so only the start needs the scope. NOT
-    * thread-safe: the session conf is shared, so two streams starting
-    * concurrently could capture each other's confs — every caller here
-    * starts streams from the single driver thread (the Bench/Verify
-    * mains are sequential). */
+    * unset. A stream clones the session conf at query START (the
+    * shuffle-partition count, the state store confs), but a file source
+    * builds its metadata log from the ORIGINAL session's Hadoop conf on
+    * the stream thread, after `start()` returns — so a drain holds the
+    * scope until it has stopped. NOT thread-safe: the session conf is
+    * shared, so two streams starting concurrently could capture each
+    * other's confs — every caller here starts streams from the single
+    * driver thread (the Bench/Verify mains are sequential). */
   private[graft] def withConfs[A](s: SparkSession, confs: (String, String)*)(body: => A): A = {
     val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
     confs.foreach { case (k, v) => s.conf.set(k, v) }
@@ -286,9 +318,15 @@ object SparkEntry {
     }
   }
 
-  /** The shuffle-partition conf for a stateful drain over `inputPath`. */
-  private def streamPartitionsConf(s: SparkSession, inputPath: String): (String, String) =
-    "spark.sql.shuffle.partitions" -> streamShufflePartitions(s, inputPath).toString
+  /** The confs every drain over `inputPath` runs under: the derived
+    * shuffle-partition count, and the fork-free `FileContext` binding for
+    * local checkpoint IO ([[graft.sources.NioLocalFs]]). The stream's
+    * cloned conf carries the binding to the offset, commit and sink logs
+    * and to the RocksDB changelog writes in the state-store tasks; the
+    * session's own conf carries it to the file source's log. */
+  private def drainConfs(s: SparkSession, inputPath: String): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> streamShufflePartitions(s, inputPath).toString,
+    graft.sources.NioLocalFs.conf)
 
   /** Entries of `dir` that pass `keep`, sorted by name, listed through
     * the path's Hadoop FileSystem (any scheme); fails naming `what` and
@@ -322,7 +360,7 @@ object SparkEntry {
       table: String, name: String)(
       build: DataFrame => DataFrame): DataFrame = {
     val docPath = s"$dir/$table.parquet"
-    val schema = s.read.parquet(docPath).schema
+    val schema = parquetSchema(s, docPath)
     val raw =
       if (new java.io.File(docPath).isDirectory)
         s.readStream.schema(schema).parquet(docPath)
@@ -330,17 +368,17 @@ object SparkEntry {
         s.readStream.schema(schema)
           .option("pathGlobFilter", s"$table.parquet").parquet(dir)
     val qn = s"graft_docstream_${name}_${streamRun.incrementAndGet()}"
-    val query = withConfs(s, streamPartitionsConf(s, docPath)) {
-      build(raw).writeStream
+    withConfs(s, drainConfs(s, docPath): _*) {
+      val query = build(raw).writeStream
         .format("memory").queryName(qn)
         .outputMode("complete").start()
+      try {
+        query.processAllAvailable()
+        val rows = s.table(qn).collect()
+        s.createDataFrame(
+          java.util.Arrays.asList(rows: _*), s.table(qn).schema)
+      } finally query.stop()
     }
-    try {
-      query.processAllAvailable()
-      val rows = s.table(qn).collect()
-      s.createDataFrame(
-        java.util.Arrays.asList(rows: _*), s.table(qn).schema)
-    } finally query.stop()
   }
 
   /** Streaming-parity harness: replays the events table through a REAL
@@ -367,7 +405,7 @@ object SparkEntry {
     // ScaleData produces), else glob-filter the parent to the one file
     // (the driver's single-file testdata layout)
     val evPath = s"$dir/events.parquet"
-    val schema = s.read.parquet(evPath).schema
+    val schema = parquetSchema(s, evPath)
     val raw =
       if (new java.io.File(evPath).isDirectory)
         s.readStream.schema(schema).parquet(evPath)
@@ -404,17 +442,19 @@ object SparkEntry {
     // stalls multiplied exactly that fixed cost (the q_asof_stream
     // 6.4s<->29.8s swing in BASELINE.md — root cause written down in
     // SCALE.md round 11)
-    val query = withConfs(s, streamPartitionsConf(s, evPath),
+    val result = build(union)
+    withConfs(s, drainConfs(s, evPath) ++ Seq(
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
-      build(union).writeStream
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"): _*) {
+      val query = result.writeStream
         .format("parquet").option("path", s"$out/data")
         .option("checkpointLocation", s"$out/ckpt")
         .outputMode("append").start()
+      try query.processAllAvailable() finally query.stop()
     }
-    try query.processAllAvailable() finally query.stop()
-    s.read.parquet(s"$out/data")
+    // the sink wrote `result`'s columns: no schema-inference job
+    s.read.schema(result.schema).parquet(s"$out/data")
   }
 
   // events.ts arrives normalized to epoch millis by tbl().
@@ -2279,14 +2319,17 @@ object SparkEntry {
       }
       val idx = base.resolve("index").toString
       val surv = base.resolve("surv").toString
-      val schema = s.read.parquet(inDir.toString).schema
+      // the staged files hold `docs`' columns: no schema-inference job
+      // (the file stream source forces every field nullable, as inference
+      // would)
+      val schema = docs.schema
       // the foreachBatch body's joins/aggs read the session
       // shuffle-partition conf at each batch's plan time — scope the
       // whole drain to the input-derived size (same rationale as the
       // stateful drains: a ~1.7k-doc microbatch over 32-partition
       // exchanges is pure task-scheduling overhead; results are
       // partitioning-independent)
-      withConfs(s, streamPartitionsConf(s, inDir.toString)) {
+      withConfs(s, drainConfs(s, inDir.toString): _*) {
         val q = Dedup.incrementalNearDupSink(
           s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
             .parquet(inDir.toString),

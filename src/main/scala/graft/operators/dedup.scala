@@ -80,15 +80,6 @@ object Dedup {
 
   // -------------------------------------------------------------- minhash
 
-  /** k-function minhash signature over a PRE-HASHED token array column
-    * (see hashedTokens) — md5 runs once per token, not once per hash fn. */
-  def minhashSignature(hashedTok: Column, k: Int, seed: Long): Column = {
-    val params = hashParams(k, seed)
-    array(params.map { case (a, b) =>
-      array_min(transform(hashedTok, h => (lit(a) * h + lit(b)) % P))
-    }: _*)
-  }
-
   /** Rolling-combine base for shingle hashes. */
   val B: Long = 1000003L
 
@@ -180,13 +171,15 @@ object Dedup {
     }
   }
 
-  /** Hashed lowercase whitespace words of a text. Null text hashes to no
-    * words — the central guard that makes every kernel built on this
+  /** Hashed whitespace words of a text, lowercased the way Spark's
+    * `lower()` does whatever the JVM locale ([[sparkLower]]), so the
+    * Column-form [[hashedTokens]] hashes the same words. Null text hashes
+    * to no words — the central guard that makes every kernel built on this
     * (signatures, spans, novelty, contamination probes) follow the house
     * null convention (contribute nothing) instead of NPE-ing. */
   private[operators] def wordHashes(text: String): Array[Long] =
     if (text == null) Array.empty[Long]
-    else wsPattern.split(text.toLowerCase).map(w => md5LongJvm(w) % P)
+    else wsPattern.split(sparkLower(text)).map(w => md5LongJvm(w) % P)
 
   /** Distinct hashed word-shingles of a text (the set both the minhash
     * signature and exact Jaccard are computed over). */

@@ -857,6 +857,18 @@ class PipelineOpsSpec extends GraftSpec {
     assert(fused == reference)
   }
 
+  test("minhash word hashes fold case like Spark's lower() under a Turkish default locale") {
+    // a Turkish String.toLowerCase folds I to a dotless ı: IS/IN/IT would
+    // hash apart from is/in/it and the two docs would stop pairing
+    val cased = Seq((1L, "THE FOX IS IN IT"), (2L, "the fox is in it"))
+      .toDF("doc_id", "text")
+    def pairs() = Dedup.minhashNearDupPairs(cased, "text", "doc_id",
+        numHashes = 16, bands = 4, seed = 42L, shingleN = 1, threshold = 0.8)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs() == Set((1L, 2L)))
+    assert(withTurkishLocale(pairs()) == Set((1L, 2L)))
+  }
+
   test("prefix-filter join is the exact ground truth over the LSH pipeline's pairs") {
     // q_ssjoin and the minhash verify stage score the SAME hashed
     // 3-gram shingle sets at the same threshold, so every verified LSH
