@@ -102,10 +102,10 @@ object SparkEntry {
   /** Unrolled-FCM oracle generator (m=2, explicit-init semantics): each
     * round is a membership CTE (squared distances with the reference's
     * zero guard, u_i = (dmin/d_i)/Σ) and a centroid CTE ((1/Σu²)·Σu²x,
-    * mirroring the scal-by-reciprocal in FCM.runBlocks). The tol-based
+    * mirroring the scal-by-reciprocal in FCM.fit's update). The tol-based
     * early stop is emulated: dd$t = max |u$t - u$(t-1)| per round, and
     * the final centroids come from the first round whose delta <= tol —
-    * exactly FCM.runBlocks' loop. Shared by q_fcm_fit (literal init) and
+    * exactly FCM.fit's stop rule, one CentroidFit round per CTE round. Shared by q_fcm_fit (literal init) and
     * q_fcm_fit_hash (hash-sample init); `xCte` must expose rid plus
     * x0..x{dim-1}, `c0Cte` a one-row c0 with c{i}_{j} columns. */
   private def fcmFitOracle(xCte: String, c0Cte: String, k: Int, dim: Int,

@@ -32,6 +32,28 @@ object VecOps {
     s
   }
 
+  /** Index of the centroid nearest to the vector at `x(off)`, by squared
+    * Euclidean distance summed left to right over the centroid's
+    * dimensions; a tie goes to the lowest index. A NaN distance orders
+    * above every number and equals another NaN, as in Spark SQL and
+    * DuckDB, so this is the first-min of `KMeansDet.assignExpr`'s CASE
+    * chain: a row whose distances are all NaN lands in cluster 0. */
+  def nearest(x: Array[Double], off: Int, centroids: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestD = Double.NaN
+    var i = 0
+    while (i < centroids.length) {
+      val c = centroids(i)
+      var s = 0.0; var j = 0
+      while (j < c.length) { val t = x(off + j) - c(j); s += t * t; j += 1 }
+      if (s < bestD || (java.lang.Double.isNaN(bestD) && !java.lang.Double.isNaN(s))) {
+        best = i; bestD = s
+      }
+      i += 1
+    }
+    best
+  }
+
   def euclidean(a: Array[Double], b: Array[Double]): Double = math.sqrt(sqDist(a, b))
 
   /** Cosine distance 1 - cos(a,b); 0-norm inputs yield NaN like the reference. */

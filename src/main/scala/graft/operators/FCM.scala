@@ -25,13 +25,9 @@ import scala.util.hashing.MurmurHash3
  * Spark architecture: memberships are a pure function of the centroids
  * (except the random epoch-0 matrix, which we regenerate deterministically
  * from a per-point hash), so NO per-row membership state is cached or
- * shuffled — each round is ONE treeAggregate over the cached feature
- * Dataset with broadcast (prev, curr) centroid pairs, accumulating
- * (sum u^m, sum u^m x, max |delta u|) in primitive arrays. The Flink
- * iteration machinery (epoch watermarks, feedback edges, termination
- * streams — FCM.java:85-98,269-341) collapses into this driver loop; per
- * round cost is one pass over the data and O(k*d) driver state, so the
- * same loop runs unchanged on a 1000-executor cluster.
+ * shuffled — each round is one step of [[CentroidFit]]'s driver loop with
+ * broadcast (prev, curr) centroid pairs, accumulating
+ * (sum u^m, sum u^m x, max |delta u|) in primitive arrays.
  */
 class FCM(override val uid: String) extends Estimator[FCMModel]
     with FCMParams with DefaultParamsWritable {
@@ -61,50 +57,80 @@ class FCM(override val uid: String) extends Estimator[FCMModel]
 
   override def fit(ds: Dataset[_]): FCMModel = {
     val df = ds.toDF()
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = df.select(Features.asArray(df, $(featuresCol)))
-      .as[Array[Double]].rdd
-    // Hash-sample init: the k rows with the smallest 60-bit md5 of the id
-    // column (ties broken by id) — a deterministic, partition-independent,
-    // ENGINE-REPRODUCIBLE sample (the DuckDB oracle replays the identical
-    // ordering), planned as a distributed TakeOrderedAndProject. Behaves
-    // like explicit centroids: epoch-0 memberships derive from them.
-    val hashInit: Option[Array[Array[Double]]] =
-      if (initialCentroids.isEmpty && $(initIdCol).nonEmpty) Some {
-        // The fixed-width hex substring orders identically to its 60-bit
-        // numeric value (and to the oracle's ::BIGINT sort) — skipping
-        // conv, which profiles at ~the md5's own per-row cost (KMeansDet
-        // carries the same form).
-        val h = substring(md5(col($(initIdCol)).cast("string")), 1, 15)
-        df.orderBy(h.asc, col($(initIdCol)).asc)
-          .limit($(k))
-          .select(Features.asArray(df, $(featuresCol)))
-          .as[Array[Double]].collect()
-      } else None
-    val explicit = initialCentroids.orElse(hashInit)
-    // Default (no explicit/hash init): the epoch-0 state is the content-
-    // hash-keyed Dirichlet membership matrix inside runBlocks — already
-    // partition-independent — and the init centroids are never consulted
-    // on that path, so a single-row dims probe replaces the old
-    // takeSample (which cost a pass and was partition-dependent for
-    // nothing).
-    val init = explicit.getOrElse(Array(rows.first()))
-    // Iterations run over flat per-block arrays: ~15k cached block objects
-    // instead of tens of millions of boxed Array[Double] rows — sequential
-    // scans, no old-gen pointer chasing.
-    val blocks = FCM.blockify(rows)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val centroids = FCM.runBlocks(blocks, init, $(k), $(m), $(tol),
-        $(maxIter), $(seed), $(distanceMeasure),
-        explicitInit = explicit.isDefined)
-      copyValues(new FCMModel(Identifiable.randomUID("fcmModel"))
-        .setCentroids(centroids)).setParent(this)
-    // blocking: release executor storage deterministically before the
-    // caller's next job — sequential fits (canopy->FCM composition, bench
-    // reruns) must not stack block caches in constrained memory
-    } finally blocks.unpersist(blocking = true)
+    import df.sparkSession.implicits._
+    val features = Features.asArray(df, $(featuresCol))
+    // The hash-sample init behaves like explicit centroids: epoch-0
+    // memberships derive from them.
+    val explicit = initialCentroids.orElse(
+      if ($(initIdCol).isEmpty) None
+      else Some(CentroidFit.hashSample(df, $(initIdCol), features, $(k))))
+    // Random init: the epoch-0 state is the content-hash-keyed Dirichlet
+    // membership matrix (already partition-independent) and the starting
+    // centroids are never consulted, so one row stands in for them — it
+    // sets the dimension, and its absence means the input is empty.
+    val init = CentroidFit.start("FCM", $(k),
+      explicit.getOrElse(df.select(features).as[Array[Double]].head(1)))
+    val k0 = $(k); val m0 = $(m); val tol0 = $(tol); val seed0 = $(seed)
+    val measure = $(distanceMeasure)
+    val explicitInit = explicit.isDefined
+    val dims = init(0).length
+    // State: (prev, curr) centroids. One pass per round: membership under
+    // curr (epoch i) and prev (epoch i-1, or the regenerated Dirichlet
+    // init), accumulating the centroid update and max |delta u| exactly as
+    // FCM.java:422-503 does across tasks. With an explicit init the epoch-0
+    // memberships come from the provided centroids (so Canopy seeding
+    // shapes the fit); the Dirichlet rows are the random-init path,
+    // matching FCM.java:74-81.
+    val (_, centroids) = CentroidFit.run(CentroidFit.blocks(df.select(features), dims, "FCM"),
+      (null: Array[Array[Double]], init), $(maxIter),
+      (new Array[Double](k0), Array.fill(k0)(new Array[Double](dims)), -1.0))(
+      seqOp = { case ((prev, curr), iter, (cs, pc, d0), (n, flat)) =>
+        // per-block scratch: row + distance/membership buffers
+        val p = new Array[Double](dims)
+        val dis = new Array[Double](k0)
+        val uC = new Array[Double](k0)
+        val uP = new Array[Double](k0)
+        var d = d0
+        var r = 0
+        while (r < n) {
+          System.arraycopy(flat, r * dims, p, 0, dims)
+          val uCurr =
+            if (iter == 0 && !explicitInit) FCM.dirichletRow(p, k0, seed0)
+            else { FCM.membershipInto(p, curr, measure, m0, dis, uC); uC }
+          if (iter > 0) {
+            val uPrev =
+              if (iter == 1 && !explicitInit) FCM.dirichletRow(p, k0, seed0)
+              else { FCM.membershipInto(p, prev, measure, m0, dis, uP); uP }
+            var i = 0
+            while (i < k0) {
+              val t = math.abs(uCurr(i) - uPrev(i)); if (t > d) d = t; i += 1
+            }
+          }
+          var i = 0
+          while (i < k0) {
+            val u = uCurr(i)
+            val um = if (m0 == 2.0) u * u else math.pow(u, m0)
+            cs(i) += um
+            VecOps.axpy(um, p, pc(i))
+            i += 1
+          }
+          r += 1
+        }
+        (cs, pc, d)
+      },
+      combOp = { case ((cs1, pc1, d1), (cs2, pc2, d2)) =>
+        var i = 0
+        while (i < k0) { cs1(i) += cs2(i); VecOps.axpy(1.0, pc2(i), pc1(i)); i += 1 }
+        (cs1, pc1, math.max(d1, d2))
+      })(
+      step = { case ((_, curr), (sums, contrib, delta), iter) =>
+        val next = Array.tabulate(k0) { i =>
+          if (sums(i) == 0.0) curr(i) else VecOps.scal(1.0 / sums(i), contrib(i))
+        }
+        ((curr, next), iter > 0 && delta >= 0 && delta <= tol0)
+      })
+    copyValues(new FCMModel(Identifiable.randomUID("fcmModel"))
+      .setCentroids(centroids)).setParent(this)
   }
 
   override def transformSchema(schema: StructType): StructType =
@@ -214,105 +240,6 @@ object FCM extends DefaultParamsReadable[FCM] {
     val s = e.sum
     e.map(_ / s)
   }
-
-  /** Rows -> flat (rowCount, values) blocks for the iteration cache. */
-  def blockify(rows: org.apache.spark.rdd.RDD[Array[Double]],
-               blockSize: Int = 4096): org.apache.spark.rdd.RDD[(Int, Array[Double])] =
-    rows.mapPartitions { it =>
-      it.grouped(blockSize).map { g =>
-        val d = g.head.length
-        val flat = new Array[Double](g.length * d)
-        var i = 0
-        g.foreach { r => System.arraycopy(r, 0, flat, i * d, d); i += 1 }
-        (g.length, flat)
-      }
-    }
-
-  /** Driver loop over row blocks; returns final centroids. With
-    * `explicitInit` the epoch-0 memberships are computed from the provided
-    * centroids (so Canopy seeding actually shapes the fit); the Dirichlet
-    * row init is the random-init path, matching FCM.java:74-81. */
-  def runBlocks(blocks: org.apache.spark.rdd.RDD[(Int, Array[Double])],
-                init: Array[Array[Double]], k: Int, m: Double, tol: Double,
-                maxIter: Int, seed: Long, measure: String,
-                explicitInit: Boolean = false): Array[Array[Double]] = {
-    val sc = blocks.sparkContext
-    var curr: Array[Array[Double]] = init
-    require(curr.nonEmpty, "cannot fit FCM on an empty dataset")
-    // Degenerate input (fewer rows than k): pad by repeating samples, like
-    // the reference's selectRandomCentroids on duplicate-heavy data.
-    while (curr.length < k) curr = curr ++ curr.take(k - curr.length)
-    var prev: Array[Array[Double]] = null
-
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val bPrev = sc.broadcast(prev)
-      val bCurr = sc.broadcast(curr)
-      val dims = curr(0).length
-      // One pass: membership under curr (epoch i) and prev (epoch i-1, or
-      // the regenerated Dirichlet init), accumulating the centroid update
-      // and max |delta u| exactly as FCM.java:422-503 does across tasks.
-      val (sums, contrib, delta) = blocks.treeAggregate(
-        (new Array[Double](k), Array.fill(k)(new Array[Double](dims)), -1.0))(
-        seqOp = { case ((cs, pc, d0), (n, flat)) =>
-          // per-block scratch: row + distance/membership buffers
-          val p = new Array[Double](dims)
-          val dis = new Array[Double](k)
-          val uC = new Array[Double](k)
-          val uP = new Array[Double](k)
-          var d = d0
-          var r = 0
-          while (r < n) {
-            System.arraycopy(flat, r * dims, p, 0, dims)
-            val uCurr =
-              if (iter == 0 && !explicitInit) dirichletRow(p, k, seed)
-              else { membershipInto(p, bCurr.value, measure, m, dis, uC); uC }
-            if (iter > 0) {
-              val uPrev =
-                if (iter == 1 && !explicitInit) dirichletRow(p, k, seed)
-                else { membershipInto(p, bPrev.value, measure, m, dis, uP); uP }
-              var i = 0
-              while (i < k) {
-                val t = math.abs(uCurr(i) - uPrev(i)); if (t > d) d = t; i += 1
-              }
-            }
-            var i = 0
-            while (i < k) {
-              val u = uCurr(i)
-              val um = if (m == 2.0) u * u else math.pow(u, m)
-              cs(i) += um
-              VecOps.axpy(um, p, pc(i))
-              i += 1
-            }
-            r += 1
-          }
-          (cs, pc, d)
-        },
-        combOp = { case ((cs1, pc1, d1), (cs2, pc2, d2)) =>
-          var i = 0
-          while (i < k) { cs1(i) += cs2(i); VecOps.axpy(1.0, pc2(i), pc1(i)); i += 1 }
-          (cs1, pc1, math.max(d1, d2))
-        })
-      bPrev.destroy(); bCurr.destroy()
-      prev = curr
-      curr = Array.tabulate(k) { i =>
-        if (sums(i) == 0.0) prev(i) else VecOps.scal(1.0 / sums(i), contrib(i))
-      }
-      converged = iter > 0 && delta >= 0 && delta <= tol
-      iter += 1
-    }
-    curr
-  }
-
-  /** Row-RDD convenience wrapper (init sampling + blocking). */
-  def run(points: org.apache.spark.rdd.RDD[Array[Double]], k: Int, m: Double,
-          tol: Double, maxIter: Int, seed: Long, measure: String,
-          init: Option[Array[Array[Double]]] = None): Array[Array[Double]] = {
-    val curr = init.getOrElse(points.takeSample(withReplacement = false, k, seed))
-    runBlocks(blockify(points), curr, k, m, tol, maxIter, seed, measure,
-      explicitInit = init.isDefined)
-  }
 }
 
 /**
@@ -322,24 +249,11 @@ object FCM extends DefaultParamsReadable[FCM] {
  * UDF runs over primitive arrays.
  */
 class FCMModel(override val uid: String) extends Model[FCMModel]
-    with FCMParams {
+    with FCMParams with CentroidModel {
 
   def this() = this(Identifiable.randomUID("fcmModel"))
 
-  private var centroids: Array[Array[Double]] = _
-  def setCentroids(value: Array[Array[Double]]): this.type = { centroids = value; this }
-  def getCentroids: Array[Array[Double]] = centroids
-
   def setFeaturesColM(value: String): this.type = set(featuresCol, value)
-
-  /** Model data as a DataFrame (cluster_id, centroid) — the scalable analog
-    * of FCMModelData (FCMModelData.java:35-47); the O(n*k) membership
-    * matrix is intentionally NOT materialized (see membershipMatrix). */
-  def modelData(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("cluster_id", "centroid")
-  }
 
   /** Per-row membership vector for a dataset — computed on demand instead
     * of being packed into one driver-side object like FCMModelData's
@@ -380,18 +294,10 @@ class FCMModel(override val uid: String) extends Model[FCMModel]
 
   override def copy(extra: ParamMap): FCMModel =
     copyValues(new FCMModel(uid).setCentroids(centroids), extra).setParent(parent)
-
-  /** Parquet model layout: centroids under &lt;path&gt;/data (FCMModel.java:153-166
-    * used custom byte encoders; Parquet replaces them). */
-  def save(path: String, spark: SparkSession): Unit =
-    modelData(spark).coalesce(1).write.mode("overwrite").parquet(s"$path/data")
 }
 
 object FCMModel {
-  def load(spark: SparkSession, path: String): FCMModel = {
-    val rows = spark.read.parquet(s"$path/data")
-      .orderBy("cluster_id").collect()
-    val cs = rows.map(_.getAs[Seq[Double]]("centroid").toArray)
-    new FCMModel(Identifiable.randomUID("fcmModel")).setCentroids(cs)
-  }
+  def load(spark: SparkSession, path: String): FCMModel =
+    new FCMModel(Identifiable.randomUID("fcmModel"))
+      .setCentroids(CentroidModel.load(spark, path))
 }

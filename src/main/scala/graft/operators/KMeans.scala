@@ -31,8 +31,8 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType
  *    partitionings, which makes the whole ITERATIVE fit hash-exactly
  *    verifiable — not just spec-tested.
  *
- * Spark architecture (the FCM.runBlocks shape — one treeAggregate per
- * round over a cached blockified projection): features are quantized
+ * Spark architecture ([[CentroidFit]]'s driver loop, shared with FCM —
+ * one treeAggregate per round over cached flat blocks): features are quantized
  * ONCE at cache build to scale-12 unscaled longs with Spark's own
  * double->decimal(18,12) cast semantics (|x| < 1e6 enforced there —
  * per-row BigDecimal allocation inside the loop is what an earlier
@@ -40,12 +40,11 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType
  * round accumulates them into per-cluster 128-bit sums — the same
  * arithmetic DuckDB's own decimal sum uses — at primitive-long speed.
  * Per-round cost is one scan of the cached blocks; the driver holds
- * O(k*d) state, and nothing shuffles. The same loop runs unchanged on a
- * 1000-executor cluster. Assignment inside the fit mirrors the predict
- * expression's text-order double arithmetic exactly (left-to-right
- * squared-distance accumulation, first-min tie-break to the LOWEST
- * cluster index, NaN falling through to cluster k-1); an empty cluster
- * keeps its previous centroid.
+ * O(k*d) state, and nothing shuffles. Assignment inside the fit
+ * ([[graft.core.VecOps.nearest]]) mirrors the predict expression's
+ * text-order double arithmetic exactly (left-to-right squared-distance
+ * accumulation, first-min tie-break to the LOWEST cluster index); an
+ * empty cluster keeps its previous centroid.
  */
 
 /** Thrown by [[KMeansDet.quantize12]] when a feature value is non-finite
@@ -77,101 +76,47 @@ class KMeansDet(override val uid: String) extends Estimator[KMeansDetModel]
 
   override def fit(ds: Dataset[_]): KMeansDetModel = {
     val df = ds.toDF()
-    val spark = df.sparkSession
-    import spark.implicits._
     require(initialCentroids.isDefined || $(initIdCol).nonEmpty,
       "KMeansDet needs setInitialCentroids or setInitIdCol — determinism " +
         "is the point of this estimator; there is no random-init path.")
-    val init: Array[Array[Double]] = initialCentroids.getOrElse {
-      // Ordering by the fixed-width hex substring is identical to
-      // ordering by its 60-bit numeric value (lowercase hex is
-      // lexicographic-numeric) — same selection as the oracle's
-      // ('0x' || substr(md5(...), 1, 15))::BIGINT sort, without conv's
-      // per-row cost, which profiled 2x the md5 itself at 60M rows.
-      val h = substring(md5(col($(initIdCol)).cast("string")), 1, 15)
-      df.orderBy(h.asc, col($(initIdCol)).asc)
-        .limit($(k))
-        .select(Features.asArray(df, $(featuresCol)))
-        .as[Array[Double]].collect()
-    }
-    require(init.nonEmpty, "cannot fit k-means on an empty dataset")
-    // Degenerate input (fewer rows than k): pad by repeating samples so
-    // the loop stays well-formed; duplicates collapse to empty clusters.
-    var curr = init
-    while (curr.length < $(k)) curr = curr ++ curr.take($(k) - curr.length)
-    val dim = curr(0).length
-
-    val rawRdd = df.select(Features.asArray(df, $(featuresCol))).rdd.map { r =>
-      val s = r.getAs[scala.collection.Seq[Any]](0)
-      require(s != null && s.length == dim && s.forall(_ != null),
-        s"KMeansDet: feature vectors must be non-null with $dim non-null " +
-          "elements")
-      val a = new Array[Double](dim)
-      var j = 0
-      while (j < dim) { a(j) = s(j).asInstanceOf[Number].doubleValue; j += 1 }
-      a
-    }
-    val blocks = KMeansDet.blockify(rawRdd, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val k0 = $(k)
-    try {
-      var iter = 0
-      var converged = false
-      while (iter < $(maxIter) && !converged) {
-        val cc = curr
-        val (cnt, hi, lo) = blocks.treeAggregate(
-          (new Array[Long](k0), new Array[Long](k0 * dim),
-            new Array[Long](k0 * dim)))(
-          seqOp = { case (acc @ (cnt, hi, lo), (n, raw, q)) =>
-            val dists = new Array[Double](k0)
-            var r = 0
-            while (r < n) {
-              val base = r * dim
-              var i = 0
-              while (i < k0) {
-                val c = cc(i)
-                var s = 0.0; var j = 0
-                while (j < dim) {
-                  val t = raw(base + j) - c(j); s += t * t; j += 1
-                }
-                dists(i) = s
-                i += 1
-              }
-              // first-min == assignExpr's chain: i wins iff d(i) <= every
-              // later d; right-scan with a NaN-propagating running min is
-              // equivalent clause-for-clause (NaN comparisons all false)
-              var best = k0 - 1
-              var mAfter = dists(k0 - 1)
-              i = k0 - 2
-              while (i >= 0) {
-                val d = dists(i)
-                if (d <= mAfter) best = i
-                mAfter = java.lang.Math.min(d, mAfter)
-                i -= 1
-              }
-              cnt(best) += 1
-              val ob = best * dim
-              var j = 0
-              while (j < dim) {
-                KMeansDet.add128(hi, lo, ob + j, q(base + j)); j += 1
-              }
-              r += 1
-            }
-            acc
-          },
-          combOp = { case ((cnt1, hi1, lo1), (cnt2, hi2, lo2)) =>
-            var i = 0
-            while (i < k0) { cnt1(i) += cnt2(i); i += 1 }
-            var idx = 0
-            while (idx < k0 * dim) {
-              val a = lo1(idx); val b = lo2(idx)
-              val nlo = a + b
-              hi1(idx) += hi2(idx) + (((a & b) | ((a | b) & ~nlo)) >>> 63)
-              lo1(idx) = nlo
-              idx += 1
-            }
-            (cnt1, hi1, lo1)
-          })
+    val features = Features.asArray(df, $(featuresCol))
+    val init = CentroidFit.start("KMeansDet", $(k), initialCentroids.getOrElse(
+      CentroidFit.hashSample(df, $(initIdCol), features, $(k))))
+    val k0 = $(k); val tol0 = $(tol)
+    val dim = init(0).length
+    val blocks = CentroidFit.blocks(df.select(features), dim, "KMeansDet")
+      .map { case (n, raw) => (n, raw, KMeansDet.quantizeAll(raw)) }
+    val centroids = CentroidFit.run(blocks, init, $(maxIter),
+      (new Array[Long](k0), new Array[Long](k0 * dim), new Array[Long](k0 * dim)))(
+      seqOp = { case (cc, _, acc @ (cnt, hi, lo), (n, raw, q)) =>
+        var r = 0
+        while (r < n) {
+          val base = r * dim
+          val best = VecOps.nearest(raw, base, cc)
+          cnt(best) += 1
+          val ob = best * dim
+          var j = 0
+          while (j < dim) {
+            KMeansDet.add128(hi, lo, ob + j, q(base + j)); j += 1
+          }
+          r += 1
+        }
+        acc
+      },
+      combOp = { case ((cnt1, hi1, lo1), (cnt2, hi2, lo2)) =>
+        var i = 0
+        while (i < k0) { cnt1(i) += cnt2(i); i += 1 }
+        var idx = 0
+        while (idx < k0 * dim) {
+          val a = lo1(idx); val b = lo2(idx)
+          val nlo = a + b
+          hi1(idx) += hi2(idx) + (((a & b) | ((a | b) & ~nlo)) >>> 63)
+          lo1(idx) = nlo
+          idx += 1
+        }
+        (cnt1, hi1, lo1)
+      })(
+      step = { case (curr, (cnt, hi, lo), _) =>
         val next = curr.map(_.clone())
         var i = 0
         while (i < k0) {
@@ -195,13 +140,10 @@ class KMeansDet(override val uid: String) extends Estimator[KMeansDetModel]
           }
           i += 1
         }
-        curr = next
-        converged = delta <= $(tol)
-        iter += 1
-      }
-      copyValues(new KMeansDetModel(Identifiable.randomUID("kmeansdetModel"))
-        .setCentroids(curr)).setParent(this)
-    } finally blocks.unpersist(blocking = true)
+        (next, delta <= tol0)
+      })
+    copyValues(new KMeansDetModel(Identifiable.randomUID("kmeansdetModel"))
+      .setCentroids(centroids)).setParent(this)
   }
 
   override def transformSchema(schema: StructType): StructType = {
@@ -240,33 +182,15 @@ trait KMeansDetParams extends HasFeaturesCol with HasPredictionCol
 
 object KMeansDet extends DefaultParamsReadable[KMeansDet] {
 
-  /** Rows -> flat (rowCount, raw doubles, scale-12 unscaled longs) blocks
-    * for the iteration cache. Quantization replicates Spark's
-    * double->decimal(18,12) cast (shortest-repr BigDecimal, HALF_UP at
-    * scale 12) exactly once per value; NaN/Inf/|x|>=1e6 fail fast here
-    * rather than skewing sums silently. */
-  def blockify(rows: org.apache.spark.rdd.RDD[Array[Double]], dim: Int,
-               blockSize: Int = 4096)
-      : org.apache.spark.rdd.RDD[(Int, Array[Double], Array[Long])] =
-    rows.mapPartitions { it =>
-      it.grouped(blockSize).map { g =>
-        val n = g.length
-        val raw = new Array[Double](n * dim)
-        val q = new Array[Long](n * dim)
-        var i = 0
-        g.foreach { r =>
-          var j = 0
-          while (j < dim) {
-            val x = r(j)
-            raw(i * dim + j) = x
-            q(i * dim + j) = quantize12(x)
-            j += 1
-          }
-          i += 1
-        }
-        (n, raw, q)
-      }
-    }
+  /** The block's values as scale-12 unscaled longs, quantized once at
+    * cache build; NaN/Inf/|x|>=1e6 fail fast here rather than skewing
+    * sums silently. */
+  private def quantizeAll(raw: Array[Double]): Array[Long] = {
+    val q = new Array[Long](raw.length)
+    var i = 0
+    while (i < raw.length) { q(i) = quantize12(raw(i)); i += 1 }
+    q
+  }
 
   /** x as a scale-12 unscaled long with Spark's cast semantics:
     * BigDecimal over the double's SHORTEST decimal representation
@@ -328,9 +252,10 @@ object KMeansDet extends DefaultParamsReadable[KMeansDet] {
     * its squared distance is <= every LATER cluster's (earlier clusters
     * already failed their own clause), i.e. the first index attaining the
     * minimum. Identical text-order arithmetic to the SQL oracle, so the
-    * doubles compare bit-equally in both engines. NaN features fall
-    * through to cluster k-1 here (SQL comparisons with NaN differ across
-    * engines) — filter NaN upstream when it can occur. */
+    * doubles compare bit-equally in both engines. Spark SQL and DuckDB
+    * order NaN above every number and equal to itself (NaN <= NaN is
+    * true), so a NaN distance loses to any number and an all-NaN row
+    * lands in cluster 0 — as on the UDF path ([[graft.core.VecOps.nearest]]). */
   def assignExpr(fcols: Seq[Column], centroids: Array[Array[Double]]): Column = {
     val d: Array[Column] = centroids.map { c =>
       c.zipWithIndex.map { case (v, j) =>
@@ -351,19 +276,9 @@ object KMeansDet extends DefaultParamsReadable[KMeansDet] {
   * same logic drops to a broadcast-backed UDF so the plan does not carry
   * a megabyte of expression tree. */
 class KMeansDetModel(override val uid: String) extends Model[KMeansDetModel]
-    with KMeansDetParams {
+    with KMeansDetParams with CentroidModel {
 
   def this() = this(Identifiable.randomUID("kmeansdetModel"))
-
-  private var centroids: Array[Array[Double]] = _
-  def setCentroids(value: Array[Array[Double]]): this.type = { centroids = value; this }
-  def getCentroids: Array[Array[Double]] = centroids
-
-  def modelData(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("cluster_id", "centroid")
-  }
 
   override def transform(ds: Dataset[_]): DataFrame = {
     val df = ds.toDF()
@@ -375,20 +290,7 @@ class KMeansDetModel(override val uid: String) extends Model[KMeansDetModel]
         KMeansDet.assignExpr(fcols, centroids)
       } else {
         val bc = df.sparkSession.sparkContext.broadcast(centroids)
-        udf { (p: Seq[Double]) =>
-          val arr = p.toArray
-          val cs = bc.value
-          var best = 0; var bestD = Double.MaxValue
-          var i = 0
-          while (i < cs.length) {
-            val c = cs(i)
-            var s = 0.0; var j = 0
-            while (j < c.length) { val t = arr(j) - c(j); s += t * t; j += 1 }
-            if (s < bestD) { bestD = s; best = i }
-            i += 1
-          }
-          best
-        }.apply(f)
+        udf((p: Seq[Double]) => VecOps.nearest(p.toArray, 0, bc.value)).apply(f)
       }
     df.withColumn($(predictionCol), pred)
   }
@@ -401,16 +303,10 @@ class KMeansDetModel(override val uid: String) extends Model[KMeansDetModel]
 
   override def copy(extra: ParamMap): KMeansDetModel =
     copyValues(new KMeansDetModel(uid).setCentroids(centroids), extra).setParent(parent)
-
-  def save(path: String, spark: SparkSession): Unit =
-    modelData(spark).coalesce(1).write.mode("overwrite").parquet(s"$path/data")
 }
 
 object KMeansDetModel {
-  def load(spark: SparkSession, path: String): KMeansDetModel = {
-    val rows = spark.read.parquet(s"$path/data")
-      .orderBy("cluster_id").collect()
-    val cs = rows.map(_.getAs[Seq[Double]]("centroid").toArray)
-    new KMeansDetModel(Identifiable.randomUID("kmeansdetModel")).setCentroids(cs)
-  }
+  def load(spark: SparkSession, path: String): KMeansDetModel =
+    new KMeansDetModel(Identifiable.randomUID("kmeansdetModel"))
+      .setCentroids(CentroidModel.load(spark, path))
 }

@@ -1091,25 +1091,10 @@ object Dedup {
     val n = src.count()
     val k = math.min(maxCentroids.toLong,
       math.max(2L, (n + targetClusterSize - 1) / targetClusterSize)).toInt
-    // same deterministic hash-sample as KMeansDet.init: fixed-width hex
-    // prefix sorts identically to its 60-bit numeric value
-    val h = substring(md5(col("__id").cast("string")), 1, 15)
-    val cents: Array[Array[Double]] = src.toDF()
-      .orderBy(h.asc, col("__id").asc).limit(k)
-      .select(col("__v")).as[Array[Double]].collect()
+    val cents = CentroidFit.hashSample(src.toDF(), "__id", col("__v"), k)
     val bc = spark.sparkContext.broadcast(cents)
     src
-      .map { case (id, v) =>
-        val cs = bc.value
-        var best = 0; var bestD = Double.MaxValue
-        var i = 0
-        while (i < cs.length) {
-          val s = graft.core.VecOps.sqDist(v, cs(i))
-          if (s < bestD) { bestD = s; best = i }
-          i += 1
-        }
-        (best, id, v)
-      }
+      .map { case (id, v) => (graft.core.VecOps.nearest(v, 0, bc.value), id, v) }
       .groupByKey(_._1)
       .flatMapGroups { (cid, it) =>
         val rows = it.toArray.sortBy(_._2)

@@ -209,63 +209,44 @@ object Similarity {
       .rdd.takeSample(withReplacement = false, cells, seed)
   }
 
-  /** Lloyd-refined coarse quantizer: random seeds + a few k-means rounds
-    * over the blockified corpus (one treeAggregate per round — the same
-    * cached-block iteration shape as FCM). Balanced cells beat raw random
-    * seeds on probe recall; empty cells keep their previous centroid. */
+  /** Lloyd-refined coarse quantizer: random seeds + `iters` k-means
+    * rounds on [[CentroidFit]]'s driver loop, the loop FCM and KMeansDet
+    * fit on. Balanced cells beat raw random seeds on probe recall; empty
+    * cells keep their previous centroid. */
   def kmeansCentroids(corpus: DataFrame, vecCol: String, cells: Int,
                       iters: Int, seed: Long): Array[Array[Double]] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val rows = corpus.select(col(vecCol).cast(ArrayType(DoubleType)))
-      .as[Array[Double]].rdd
-    var centroids = rows.takeSample(withReplacement = false, cells, seed)
-    if (centroids.isEmpty) return centroids
-    val blocks = FCM.blockify(rows)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val k = centroids.length
-      val dims = centroids(0).length
-      var it = 0
-      while (it < iters) {
-        val bc = spark.sparkContext.broadcast(centroids)
-        val (sums, counts) = blocks.treeAggregate(
-          (Array.fill(k)(new Array[Double](dims)), new Array[Long](k)))(
-          seqOp = { case ((s, c), (n, flat)) =>
-            var r = 0
-            while (r < n) {
-              var best = 0; var bestD = Double.MaxValue
-              var i = 0
-              while (i < k) {
-                var d = 0.0; var j = 0
-                while (j < dims) {
-                  val t = flat(r * dims + j) - bc.value(i)(j); d += t * t; j += 1
-                }
-                if (d < bestD) { bestD = d; best = i }
-                i += 1
-              }
-              var j = 0
-              while (j < dims) { s(best)(j) += flat(r * dims + j); j += 1 }
-              c(best) += 1
-              r += 1
-            }
-            (s, c)
-          },
-          combOp = { case ((s1, c1), (s2, c2)) =>
-            var i = 0
-            while (i < k) {
-              VecOps.axpy(1.0, s2(i), s1(i)); c1(i) += c2(i); i += 1
-            }
-            (s1, c1)
-          })
-        bc.destroy()
-        centroids = Array.tabulate(k) { i =>
-          if (counts(i) == 0L) centroids(i) else VecOps.scal(1.0 / counts(i), sums(i))
+    import corpus.sparkSession.implicits._
+    val vectors = corpus.select(col(vecCol).cast(ArrayType(DoubleType)))
+    val seeds = vectors.as[Array[Double]].rdd
+      .takeSample(withReplacement = false, cells, seed)
+    if (seeds.isEmpty) return seeds
+    val k = seeds.length
+    val dims = seeds(0).length
+    CentroidFit.run(CentroidFit.blocks(vectors, dims, "kmeansCentroids"), seeds, iters,
+      (Array.fill(k)(new Array[Double](dims)), new Array[Long](k)))(
+      seqOp = { case (cs, _, (s, c), (n, flat)) =>
+        var r = 0
+        while (r < n) {
+          val best = VecOps.nearest(flat, r * dims, cs)
+          var j = 0
+          while (j < dims) { s(best)(j) += flat(r * dims + j); j += 1 }
+          c(best) += 1
+          r += 1
         }
-        it += 1
-      }
-      centroids
-    } finally blocks.unpersist(blocking = true)
+        (s, c)
+      },
+      combOp = { case ((s1, c1), (s2, c2)) =>
+        var i = 0
+        while (i < k) {
+          VecOps.axpy(1.0, s2(i), s1(i)); c1(i) += c2(i); i += 1
+        }
+        (s1, c1)
+      })(
+      step = { case (cs, (sums, counts), _) =>
+        (Array.tabulate(k) { i =>
+          if (counts(i) == 0L) cs(i) else VecOps.scal(1.0 / counts(i), sums(i))
+        }, false)
+      })
   }
 
   /** ANN top-k probing the nprobe nearest coarse cells per query.
@@ -282,17 +263,7 @@ object Similarity {
       else ivfCentroids(corpus, vecCol, cells, seed))
     val spark = corpus.sparkSession
     val bc = spark.sparkContext.broadcast(centroids)
-    val cellUdf = udf { (v: Seq[Double]) =>
-      val arr = v.toArray
-      var best = 0; var bestD = Double.MaxValue
-      var i = 0
-      while (i < bc.value.length) {
-        val d = VecOps.sqDist(arr, bc.value(i))
-        if (d < bestD) { bestD = d; best = i }
-        i += 1
-      }
-      best
-    }
+    val cellUdf = udf((v: Seq[Double]) => VecOps.nearest(v.toArray, 0, bc.value))
     val probeUdf = udf { (v: Seq[Double]) =>
       val arr = v.toArray
       bc.value.indices.map(i => (VecOps.sqDist(arr, bc.value(i)), i))

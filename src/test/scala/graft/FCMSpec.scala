@@ -136,6 +136,34 @@ class FCMSpec extends GraftSpec {
     }
   }
 
+  test("empty input fails with FCM's own message") {
+    for (fcm <- Seq(new FCM(), new FCM().setInitIdCol("id"))) {
+      val e = intercept[IllegalArgumentException](
+        fcm.fit(data.zipWithIndex.map { case (p, i) => (i.toLong, p) }
+          .toDF("id", "features").limit(0)))
+      assert(e.getMessage.contains("cannot fit FCM on an empty dataset"), e.getMessage)
+    }
+  }
+
+  test("a feature vector of another dimension fails the fit, naming the expected one") {
+    // random init: the first row sets dimension 2, and the longer second
+    // row shares its block; explicit init: 2-d centroids over 3-d rows
+    val mixed = Seq(Array(1.0, 2.0), Array(1.5, 1.8, 7.0)).map(Tuple1(_))
+      .toDF("features").coalesce(1)
+    val threeDim = Seq(Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)).map(Tuple1(_))
+      .toDF("features")
+    val fits = Seq(
+      () => new FCM().setK(2).setMaxIter(3).fit(mixed),
+      () => new FCM().setMaxIter(3)
+        .setInitialCentroids(Array(Array(0.0, 0.0), Array(5.0, 5.0))).fit(threeDim))
+    for (fit <- fits) {
+      val e = intercept[Exception](fit())
+      assert(causeChain(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("FCM: feature vectors must be non-null with 2 non-null elements")),
+        s"expected the dimension check, got: $e")
+    }
+  }
+
   test("membership rows sum to 1 and model save/load round-trips") {
     val model = new FCM().setMaxIter(100).setSeed(42).fit(df)
     val sums = model.membershipMatrix(df)

@@ -38,6 +38,11 @@ abstract class GraftSpec extends AnyFunSuite {
     try body finally java.util.Locale.setDefault(prev)
   }
 
+  /** `t` and its causes, outermost first: a failed task reaches the
+    * driver as a SparkException whose cause is the task's exception. */
+  def causeChain(t: Throwable): List[Throwable] =
+    if (t == null) Nil else t :: causeChain(t.getCause)
+
   def assertApprox(got: Seq[Double], want: Seq[Double], tol: Double): Unit = {
     assert(got.length == want.length, s"length mismatch: got $got want $want")
     got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>

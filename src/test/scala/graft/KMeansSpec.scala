@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{KMeansDet, KMeansDetModel}
+import graft.operators.{FeatureRangeException, KMeansDet, KMeansDetModel}
 import org.apache.spark.sql.functions._
 
 /** Deterministic k-means: hand-computed Lloyd's rounds, tie-break and
@@ -90,11 +90,27 @@ class KMeansSpec extends GraftSpec {
   test("large-k predict (UDF fallback) agrees with the expression path") {
     // 600 centroid cells forces the broadcast UDF; a 2-centroid prefix of
     // the same model must agree with the expression path on shared wins.
+    // An all-NaN row lands in cluster 0 on both paths: Spark SQL orders
+    // NaN above every number and NaN <= NaN is true.
     val many = Array.tabulate(300)(i => Array(i.toDouble, 0.0))
-    val big = new KMeansDetModel().setCentroids(many)
-    val out = big.transform(df).select("id", "prediction").as[(Long, Int)]
-      .collect().toMap
+    val withNaN = (pts :+ ((5L, Array(Double.NaN, Double.NaN)))).toDF("id", "features")
+    def predict(m: KMeansDetModel): Map[Long, Int] =
+      m.transform(withNaN).select("id", "prediction").as[(Long, Int)].collect().toMap
+    val out = predict(new KMeansDetModel().setCentroids(many))
     assert(out(1L) == 0 && out(2L) == 2 && out(3L) == 10 && out(4L) == 12)
+    assert(out(5L) == 0)
+    assert(predict(new KMeansDetModel().setCentroids(many.take(2)))(5L) == 0)
+  }
+
+  test("a fit over an out-of-range feature fails and releases its cached blocks") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val bad = (pts :+ ((5L, Array(1e6, 0.0)))).toDF("id", "features")
+    val e = intercept[Exception] {
+      new KMeansDet().setMaxIter(3)
+        .setInitialCentroids(Array(Array(0.0, 0.0), Array(10.0, 0.0))).fit(bad)
+    }
+    assert(causeChain(e).exists(_.isInstanceOf[FeatureRangeException]), s"got: $e")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   test("q_cluster_balance: per-cluster caps hold, picks are distinct, every cluster represented") {

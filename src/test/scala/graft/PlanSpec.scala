@@ -471,9 +471,11 @@ class PlanSpec extends GraftSpec {
   test("no persisted RDD outlives a staged query's build+run (the q_curate house rule)") {
     // pplBuckets (alone and inside q_curate3) used to persist its scored
     // relation with no unpersist path — asserting the cache manager is
-    // clean after build+run pins the Stage.materialize replacement
+    // clean after build+run pins the Stage.materialize replacement; the
+    // centroid fits cache their blocks for the fit's duration only
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    Seq("q_count_min", "q_ppl_buckets", "q_curate3").foreach { q =>
+    Seq("q_count_min", "q_ppl_buckets", "q_curate3", "q_fcm_fit", "q_kmeans",
+        "q_canopy_fcm", "q_cluster_balance").foreach { q =>
       SparkEntry.queries(q)(spark, sf()).count()
     }
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before

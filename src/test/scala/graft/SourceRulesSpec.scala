@@ -5,8 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Library-surface rules over `src/main/scala`: environment variables are
-  * read only by the two mains that own the command-line contract, and the
-  * only entry points are the four mains the build and docs name. */
+  * read only by the two mains that own the command-line contract, the
+  * only entry points are the four mains the build and docs name, and
+  * iterative fits run on the one shared centroid-fit loop. */
 class SourceRulesSpec extends AnyFunSuite {
   private val envReaders = Set("Bench.scala", "Verify.scala")
   private val mains = Set("Bench", "Verify", "ScaleData", "ExplainCheck")
@@ -33,6 +34,15 @@ class SourceRulesSpec extends AnyFunSuite {
       text.contains("sys.env") || text.contains("System.getenv")
     }.map(_.getFileName.toString)
     assert(readers.toSet.subsetOf(envReaders), s"env read outside the mains: $readers")
+  }
+
+  test("treeAggregate runs only in CentroidFit's loop and the one-pass moment kernel") {
+    val calls = mainSources.map { f =>
+      f.getFileName.toString -> """treeAggregate\(""".r.findAllIn(Files.readString(f)).length
+    }.filter(_._2 > 0).toMap
+    assert(calls.contains("CentroidFit.scala") &&
+      calls - "CentroidFit.scala" == Map("similarity.scala" -> 1),
+      s"treeAggregate( per file: $calls")
   }
 
   test("the only mains are Bench, Verify, ScaleData and ExplainCheck") {
